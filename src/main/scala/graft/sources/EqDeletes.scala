@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, when}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables.{TableProps, Warehouse}
@@ -227,6 +227,31 @@ private[graft] object EqDeletes {
         .getOrElse(all)
     }
 
+  /** A DELETE's matched key set: `keys` the distinct non-null key
+    * tuples (columns in declared key order, a checkpointed frame), `n`
+    * their count, `nullKeys` the distinct matched tuples with a NULL
+    * component — an equality sidecar cannot identify those rows.
+    */
+  final case class MatchedKeys(keys: DataFrame, n: Long, nullKeys: Long) {
+    def rows: IndexedSeq[Seq[Any]] = keys.collect().map(_.toSeq).toIndexedSeq
+  }
+
+  /** Build a DELETE's matched key set ONCE: the rows of `logical`
+    * matching `pred`, projected to the key and deduplicated BEFORE one
+    * local checkpoint, both counts from one aggregate over it — the
+    * sidecar's collect and write then read the checkpoint instead of
+    * re-running the dedupe shuffle per consumer.
+    */
+  def matchedKeys(logical: DataFrame, pred: Column, keyCols: Seq[String]): MatchedKeys = {
+    val anyNull = keyCols.map(c => col(c).isNull).reduce(_ || _)
+    val distinct = logical.filter(coalesce(pred, lit(false)))
+      .select(keyCols.map(col): _*).dropDuplicates(keyCols)
+      .localCheckpoint(true)
+    val counts = distinct.agg(count(when(anyNull, 1)), count(lit(1))).head()
+    val nulls = counts.getLong(0)
+    MatchedKeys(distinct.filter(!anyNull), counts.getLong(1) - nulls, nulls)
+  }
+
   /** Any pending merge-on-read sidecar — equality OR positional
     * ([[PosDeletes]]): the gate every raw-read/rewrite path checks.
     */
@@ -297,8 +322,11 @@ private[graft] object EqDeletes {
     val d = Paths.get(stagedDir, Dir,
       s"d${System.nanoTime()}-${java.util.UUID.randomUUID()}")
     Files.createDirectories(d)
-    keys.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(d.resolve("keys.parquet").toString)
+    // `format(...).save`, not `.parquet(path)`: this job's call site
+    // then names a write — a job list classifying call sites by reader
+    // method (`parquet at ...`) would count it as schema inference
+    keys.coalesce(1).write.mode(SaveMode.Overwrite).format("parquet")
+      .save(d.resolve("keys.parquet").toString)
     Files.write(d.resolve(KeyColsFile),
       keys.columns.mkString("\n").getBytes("UTF-8"))
     Files.write(d.resolve("census.txt"),
@@ -461,9 +489,17 @@ private[graft] object EqDeletes {
         sc.dir.getFileName.toString -> sc.dir.toString).toMap
       val fresh = new scala.collection.mutable.HashMap[String, java.util.HashSet[Any]]()
       misses.foreach(sc => fresh(sc.dir.toString) = new java.util.HashSet[Any]())
-      spark.read.parquet(misses.map(_.keysPath): _*)
-        .select(input_file_name(), org.apache.spark.sql.functions.col("*"))
-        .collect().foreach { r =>
+      // under each frame's footer schema (driver-side, memoized): no
+      // inference job, and frames stored under different column names
+      // (a re-keyed history) read as separate groups — one read per
+      // distinct schema, normally one — instead of binding to one
+      // footer's names and reading the others as NULLs
+      misses.groupBy(sc => SchemaEvolution.uniformFooterSchema(spark, sc.keysPath))
+        .toSeq.flatMap { case (schema, group) =>
+          schema.fold(spark.read)(spark.read.schema)
+            .parquet(group.map(_.keysPath): _*)
+            .select(input_file_name(), col("*")).collect()
+        }.foreach { r =>
         r.getString(0).split('/').collectFirst {
           case s if byName.contains(s) => byName(s)
         }.foreach { dir =>

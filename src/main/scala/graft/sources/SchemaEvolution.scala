@@ -276,44 +276,78 @@ object SchemaEvolution {
     }
   }
 
-  /** [[readWidened]] for a TABLE directory: a `_kb=`-partitioned layout
-    * infers per bucket dir (partial bucket rewrites leave mixed widths
-    * across buckets) and keeps partition discovery; a flat/batch-subdir
-    * layout infers per immediate subdir.
-    */
   /** Driver-side uniform-footer schema shortcut (round 21): when a flat
-    * layout's ≤64 visible data files all carry the SAME parquet schema,
-    * the inference Spark would run as a distributed footer-merge JOB is
-    * computed on the driver instead — the same
-    * ParquetToSparkSchemaConverter Spark's own inference uses, nullable-
-    * relaxed exactly as both the V1 read path and V2 ParquetTable relax
-    * it (probed empirically; identical StructType by construction, since
-    * merging N identical schemas is that schema). Declines — returning
-    * None, caller infers as before — on: census unavailable/oversized,
-    * empty dirs, partition-dir layouts (`=` components add discovered
-    * columns), heterogeneous footers (evolution straddles), or any read
-    * failure. Footer opens ride the [[graft.plans.ZoneMap.footerStats]]
-    * memo, so repeated resolutions of the same immutable snapshot cost
-    * zero I/O.
+    * layout's ≤64 visible data files all carry the SAME Spark schema once
+    * nullability is relaxed, the inference Spark would run as a
+    * distributed footer-merge JOB is computed on the driver instead — the
+    * same ParquetToSparkSchemaConverter Spark's own inference uses,
+    * relaxed at every depth exactly as both the V1 read path and V2
+    * ParquetTable relax it (`asNullable`). Uniformity is decided AFTER
+    * the relaxation: a `required` key column (merge-on-read delta files
+    * write the key REQUIRED) beside `optional` base files merges to the
+    * same nullable field Spark infers, so it is no reason to decline.
+    * Declines — returning None, caller infers as before — on: census
+    * unavailable/empty/oversized, partition-dir layouts (`=` components
+    * add discovered columns), heterogeneous schemas (evolution
+    * straddles), or any read failure. Every decline is counted by reason
+    * ([[uniformDeclines]]); a read failure is also logged once per path.
+    * Footer opens ride the [[graft.plans.ZoneMap.footerStats]] memo, so
+    * repeated resolutions of the same immutable snapshot cost zero I/O.
     */
   private val UniformSchemaMaxFiles = 64
 
-  /** Per-(path, census) memo of the uniformity DECISION: the footer
-    * schema string when uniform, None when not — so a heterogeneous
-    * (evolution-straddling) dir declines once per distinct file set
-    * instead of re-reading its footers on every resolution. The value
-    * is conf-independent (raw parquet MessageType text); conversion to
-    * a StructType happens per call under the live SQLConf. Same
-    * immutability contract as the r20 schema memo: published version
-    * dirs are rename-free, and the footer memo's mtime key guards the
-    * underlying reads.
+  /** Decline reasons of [[uniformFooterSchema]] (the keys of
+    * [[uniformDeclines]]). */
+  object Decline {
+    val Census = "census"
+    val PartitionDirs = "partition_dirs"
+    val Heterogeneous = "heterogeneous"
+    val ReadFailure = "read_failure"
+    val all: Seq[String] = Seq(Census, PartitionDirs, Heterogeneous, ReadFailure)
+  }
+
+  private val declineCounts: Map[String, java.util.concurrent.atomic.AtomicLong] =
+    Decline.all.map(_ -> new java.util.concurrent.atomic.AtomicLong).toMap
+
+  /** Process-wide count of shortcut declines per [[Decline]] reason: a
+    * decline on a non-empty census sends the caller to Spark's own
+    * schema inference. */
+  def uniformDeclines: Map[String, Long] = declineCounts.map { case (k, v) => k -> v.get }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  private val failureLogged = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def declined(reason: String): Option[StructType] = {
+    declineCounts(reason).incrementAndGet()
+    None
+  }
+
+  private def readFailed(path: String, files: Int, e: Throwable): Option[StructType] = {
+    // once per path: a broken dir re-resolved per statement must not
+    // flood the log (bounded like the memos: past it, start over)
+    if (failureLogged.size > 4096) failureLogged.clear()
+    if (failureLogged.add(path))
+      log.warn(s"event=schema_shortcut_decline reason=${Decline.ReadFailure} " +
+        s"path=$path files=$files error=${e.getClass.getName} " +
+        s"message=\"${String.valueOf(e.getMessage).replace("\"", "'").replaceAll("\\s+", " ")}\"")
+    declined(Decline.ReadFailure)
+  }
+
+  /** Per-(path, census) memo of the DISTINCT raw footer schemas (parquet
+    * MessageType text) — so a heterogeneous (evolution-straddling) dir
+    * reads its footers once per distinct file set instead of on every
+    * resolution. The value is conf-independent; conversion to a
+    * StructType and the uniformity decision happen per call under the
+    * live SQLConf. Same immutability contract as the r20 schema memo:
+    * published version dirs are rename-free, and the footer memo's mtime
+    * key guards the underlying reads.
     */
   private val UniformMemoMax = 1024
   private val uniformMemo =
-    new java.util.LinkedHashMap[(String, Seq[(String, Long)]), Option[String]](
+    new java.util.LinkedHashMap[(String, Seq[(String, Long)]), Set[String]](
       64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[(String, Long)]), Option[String]])
+          e: java.util.Map.Entry[(String, Seq[(String, Long)]), Set[String]])
           : Boolean = size() > UniformMemoMax
     }
 
@@ -330,38 +364,41 @@ object SchemaEvolution {
       } catch { case _: java.io.IOException => None }
     val census = censusOpt.orElse(fileCensus)
       .orElse(GraftCatalog.schemaCensus(path))
-      .getOrElse(return None)
-    if (census.isEmpty || census.size > UniformSchemaMaxFiles) return None
-    if (census.exists(_._1.contains("="))) return None
-    try {
+      .getOrElse(return declined(Decline.Census))
+    if (census.isEmpty || census.size > UniformSchemaMaxFiles)
+      return declined(Decline.Census)
+    if (census.exists(_._1.contains("="))) return declined(Decline.PartitionDirs)
+    val relaxed = try {
       val memoKey = (path, census)
-      val decided: Option[String] =
-        uniformMemo.synchronized(Option(uniformMemo.get(memoKey))) match {
-          case Some(d) => d
-          case None =>
-            val conf = spark.sessionState.newHadoopConf()
-            // parallel first-touch: the memo makes repeats free, but a
-            // cold snapshot pays one footer open per file — read them
-            // like fileCensus does (footers only, no data pages)
-            import scala.collection.parallel.CollectionConverters._
-            val schemas = census.par.map { case (rel, _) =>
-              graft.plans.ZoneMap.footerStats(
-                if (rel.isEmpty) path else s"$path/$rel", conf).schemaStr
-            }.toSet.seq
-            val d = if (schemas.size == 1) Some(schemas.head) else None
-            uniformMemo.synchronized { uniformMemo.put(memoKey, d); () }
-            d
+      val raw = uniformMemo.synchronized(Option(uniformMemo.get(memoKey)))
+        .getOrElse {
+          val conf = spark.sessionState.newHadoopConf()
+          // parallel first-touch: the memo makes repeats free, but a
+          // cold snapshot pays one footer open per file — read them
+          // like fileCensus does (footers only, no data pages)
+          import scala.collection.parallel.CollectionConverters._
+          val schemas = census.par.map { case (rel, _) =>
+            graft.plans.ZoneMap.footerStats(
+              if (rel.isEmpty) path else s"$path/$rel", conf).schemaStr
+          }.toSet.seq
+          uniformMemo.synchronized { uniformMemo.put(memoKey, schemas); () }
+          schemas
         }
-      decided.map { schemaStr =>
-        val msg = org.apache.parquet.schema.MessageTypeParser
-          .parseMessageType(schemaStr)
-        val converted = new org.apache.spark.sql.execution.datasources.parquet
-          .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(msg)
-        StructType(converted.map(f => f.copy(nullable = true)))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      val converter = new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      raw.map(str => org.apache.spark.sql.GraftSqlBridge.asNullable(converter.convert(
+        org.apache.parquet.schema.MessageTypeParser.parseMessageType(str))))
+    } catch {
+      case scala.util.control.NonFatal(e) => return readFailed(path, census.size, e)
+    }
+    if (relaxed.size == 1) Some(relaxed.head) else declined(Decline.Heterogeneous)
   }
 
+  /** [[readWidened]] for a TABLE directory: a `_kb=`-partitioned layout
+    * infers per bucket dir (partial bucket rewrites leave mixed widths
+    * across buckets) and keeps partition discovery; a flat/batch-subdir
+    * layout infers per immediate subdir.
+    */
   def readTableWidened(spark: SparkSession, root: String): DataFrame = {
     // driver-side shortcut first: a uniform flat snapshot reads under its
     // footer schema with NO inference job (identical result — see

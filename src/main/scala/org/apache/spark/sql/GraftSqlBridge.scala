@@ -12,6 +12,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `StructType.asNullable` (`private[spark]`): nullability relaxed at
+    * every depth — struct fields, array elements, map values — exactly
+    * as file-source reads relax an inferred or declared data schema.
+    */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
 }
 
 /** Second package-local hop, same rationale:
