@@ -107,13 +107,8 @@ object Maintenance {
         throw new java.util.ConcurrentModificationException(
           s"folded unexpected sidecars on bucketed '$table'; retrying")
       }
-      val raw =
-        if (pendingAny) {
-          val props = graft.sources.Tables.TableProps.read(wh, table)
-          graft.sources.PosDeletes.logicalRead(spark, path,
-            graft.sources.SchemaEvolution.readTableWidened(spark, path).schema,
-            graft.sources.EqDeletes.keyColsOf(props))
-        } else graft.sources.SchemaEvolution.readTableWidened(spark, path)
+      val raw = graft.sources.EqDeletes.logicalMorRead(spark, path,
+        graft.sources.Tables.TableProps.read(wh, table))
       // widened read: batch/bucket dirs may straddle a numeric widening
       // (mergeSchema refuses mixed widths) on top of additive evolution.
       // materialize BEFORE the commit ONLY for a legacy (real-directory)

@@ -120,7 +120,7 @@ object MirrorChangelog {
     * change?", the audit question write-audit-publish exists to answer.
     * Both sides read their LOGICAL content: the fork-base version from
     * main's retained history, the branch head through any pending
-    * equality-delete sidecars ([[graft.sources.EqDeletes.foldedRead]] —
+    * sidecars ([[graft.sources.EqDeletes.logicalMorRead]] —
     * an audit that resurrected sidecar-deleted keys would approve the
     * wrong publish). Same full-outer kernel as [[diff]]: delta-sized
     * output, before/after images, `_change_type` rows.
@@ -137,9 +137,7 @@ object MirrorChangelog {
     val effKey = resolveAuditKey(spark, wh, name,
       s"branchDiff('$name', '$branch')", keyCol)
     def logical(dir: String): DataFrame =
-      if (EqDeletes.anyPending(dir))
-        EqDeletes.logicalMorRead(spark, dir, props)
-      else SchemaEvolution.readTableWidened(spark, dir)
+      EqDeletes.logicalMorRead(spark, dir, props)
     val n = SchemaEvolution.normalize(_: DataFrame, wh, name)
     val baseDir = wh.publishedVersions(name).collectFirst {
       case (v, dir) if v == base => dir.toString
@@ -270,10 +268,7 @@ object MirrorChangelog {
       }.getOrElse(throw new NoSuchElementException(
         s"cherrypick('$name', '$branch'): fork base v$base is no " +
           "longer retained"))
-      def logical(dir: String) =
-        if (EqDeletes.anyPending(dir))
-          EqDeletes.logicalMorRead(spark, dir, props)
-        else SchemaEvolution.readTableWidened(spark, dir)
+      def logical(dir: String) = EqDeletes.logicalMorRead(spark, dir, props)
       val n = SchemaEvolution.normalize(_: org.apache.spark.sql.DataFrame,
         wh, name)
       val mainCur = n(logical(curDir))

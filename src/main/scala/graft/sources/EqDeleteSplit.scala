@@ -266,17 +266,17 @@ private[sources] class PosDeletePendingScan(
   * a WAP branch head) carries pending positional tombstones. The delta
   * write stacks over them — the operation must see the LOGICAL rows, or
   * tombstoned rows would re-match as live — so the post-pushdown rule
-  * splices [[PosDeletes.logicalRead]] (equality sidecars composed
+  * splices [[EqDeletes.logicalMorRead]] (equality sidecars composed
   * beneath) in place of this scan. Pinned-dir-explicit because the
   * row-level relation wraps Spark's RowLevelOperationTable and may
   * target a branch head, not the served main snapshot.
   */
 private[sources] class PosDeltaTargetScan(tableName: String,
-    snapshotDir: String, tableSchema: StructType, keyCols: Seq[String])
+    snapshotDir: String, tableSchema: StructType, props: Map[String, String])
   extends org.apache.spark.sql.connector.read.Scan {
   def logical(): org.apache.spark.sql.DataFrame =
-    PosDeletes.logicalRead(SparkSession.active, snapshotDir, tableSchema,
-      Some(keyCols))
+    EqDeletes.logicalMorRead(SparkSession.active, snapshotDir, props,
+      schema = Some(tableSchema))
   override def readSchema(): StructType = tableSchema
   override def description(): String =
     s"PosDeltaTargetScan($tableName, $snapshotDir)"

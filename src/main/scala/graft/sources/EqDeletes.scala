@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, when}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Tables.{TableProps, Warehouse}
@@ -86,8 +86,8 @@ private[graft] object EqDeletes {
     * 0.18 s vs 0.10 s clean on the 2M-row fixture, because affected
     * groups merge their stacked key sets into one probe HashSet. The
     * trigger therefore bounds the *metadata* accumulation instead:
-    * every DELETE pays a foldedRead over the stack to compute its
-    * matched set, every scan re-groups by census signature, and the
+    * every DELETE pays a [[logicalMorRead]] over the stack to compute
+    * its matched set, every scan re-groups by census signature, and the
     * driver key-set cache holds one entry per pending sidecar. 16
     * keeps all three O(small) while folding at O(deletes/16) frequency.
     */
@@ -172,7 +172,7 @@ private[graft] object EqDeletes {
   }
 
   final case class Sidecar(dir: Path, census: Set[String]) {
-    def keysPath: String = dir.resolve("keys.parquet").toString
+    def keysPath: String = keysDir(dir).toString
     /** The key signature this sidecar was WRITTEN under (declared order,
       * one column per line in `keycols.txt`) — the columns its stored
       * key frame identifies rows by. `None` for sidecars written before
@@ -191,8 +191,35 @@ private[graft] object EqDeletes {
     }
   }
 
-  /** Per-sidecar key-signature file (see [[Sidecar.storedKeyCols]]). */
+  /** A sidecar dir's files: the key frame (a Spark-written parquet
+    * directory), the data files it applies to (one relative name per
+    * line), and the key signature (see [[Sidecar.storedKeyCols]]).
+    */
+  private val KeysFile = "keys.parquet"
+  private val CensusFile = "census.txt"
   val KeyColsFile = "keycols.txt"
+
+  /** The key-frame directory of sidecar dir `d`. */
+  def keysDir(d: Path): Path = d.resolve(KeysFile)
+
+  /** Create a fresh, globally uniquely named sidecar dir under a STAGED
+    * version's `_eqdeletes/` (the key loader maps part files back
+    * through the dir name).
+    */
+  def newSidecarDir(stagedDir: Path): Path =
+    Files.createDirectories(stagedDir.resolve(Dir)
+      .resolve(s"d${System.nanoTime()}-${java.util.UUID.randomUUID()}"))
+
+  /** Record a sidecar's key signature and census beside its key frame —
+    * what [[pending]] and [[Sidecar.storedKeyCols]] read back.
+    */
+  def writeSidecarMeta(d: Path, keyCols: Seq[String],
+      census: Seq[String]): Unit = {
+    Files.write(d.resolve(KeyColsFile),
+      keyCols.mkString("\n").getBytes("UTF-8"))
+    Files.write(d.resolve(CensusFile),
+      census.sorted.mkString("\n").getBytes("UTF-8"))
+  }
 
   /** Census narrowing for a new sidecar: scope it to the files that CAN
     * contain a deleted key — zone-map evidence first (bloom ∧ min/max,
@@ -259,27 +286,67 @@ private[graft] object EqDeletes {
     pending(snapshotDir).nonEmpty ||
       PosDeletes.pending(snapshotDir).nonEmpty
 
-  /** The snapshot's LOGICAL content through BOTH sidecar kinds —
-    * positional tombstones probed per task, equality sidecars applied
-    * census-scoped. The one read every DML matching / folded fallback
-    * path shares.
+  /** The snapshot's LOGICAL content: its data files minus every pending
+    * delete, both sidecar kinds — the one DataFrame-level merge-on-read
+    * read (DML matching, the fold and compact rewrites, changelog hops,
+    * and the plan the catalog's split rules splice in for positional
+    * tombstones). Data files group by (applicable equality sidecars,
+    * carries tombstones?) and each group reads as ONE relation over
+    * exactly its files: tombstoned groups drop the ordinals their `.pos`
+    * files name ([[PosDeletes.live]]), and each applicable equality
+    * sidecar LEFT-ANTI joins on the key signature it was WRITTEN under
+    * ([[Sidecar.storedKeyCols]]; the declared key for pre-signature
+    * frames, which are positional in declared order) — a historical
+    * sidecar deletes by ITS columns even after an API-level re-key.
+    *
+    * No `broadcast()` hint: this plan splices into another query
+    * mid-optimization ([[SplitEqDeleteScans.spliceLogical]]), where a
+    * ResolvedHint node would survive past EliminateResolvedHint and fail
+    * the planner; the key frames are ≤ [[MaxKeys]] rows, so size-based
+    * join selection broadcasts them anyway. No dropDuplicates on the
+    * frames either: LEFT ANTI only tests existence.
+    *
+    * `files` restricts the read to those data files (the fold's affected
+    * region); `schema` replaces the widened footer schema (a catalog
+    * splice must match its relation's output). With nothing pending and
+    * neither given, this is [[SchemaEvolution.readTableWidened]].
     */
   def logicalMorRead(spark: SparkSession, snapshotDir: String,
-      props: Map[String, String]): DataFrame =
-    if (PosDeletes.pending(snapshotDir).nonEmpty)
-      PosDeletes.logicalRead(spark, snapshotDir,
-        SchemaEvolution.readTableWidened(spark, snapshotDir).schema,
-        keyColsOf(props))
-    else if (pending(snapshotDir).nonEmpty)
-      // LOUD when the key declaration is gone but sidecars pend (the
-      // pre-round-17 contract): a silent raw read would resurrect every
-      // sidecar-deleted row through the DML matching / audit paths
-      foldedRead(spark, snapshotDir, keyColsOf(props).getOrElse(
-        throw new IllegalStateException(
-          s"$snapshotDir carries pending equality-delete sidecars but " +
-            s"no '$KeyProp' is declared — the sidecar key frames are " +
-            "bound to the declared key; restore the property")))
-    else SchemaEvolution.readTableWidened(spark, snapshotDir)
+      props: Map[String, String], files: Option[Seq[String]] = None,
+      schema: Option[StructType] = None): DataFrame = {
+    val eq = pending(snapshotDir)
+    val pos = PosDeletes.pending(snapshotDir)
+    if (eq.isEmpty && pos.isEmpty && files.isEmpty && schema.isEmpty)
+      return SchemaEvolution.readTableWidened(spark, snapshotDir)
+    // LOUD when the key declaration is gone but sidecars pend (the
+    // pre-round-17 contract): a silent raw read would resurrect every
+    // sidecar-deleted row through the DML matching / audit paths
+    val keyCols =
+      if (eq.isEmpty) Nil
+      else keyColsOf(props).getOrElse(throw new IllegalStateException(
+        s"$snapshotDir carries pending equality-delete sidecars but " +
+          s"no '$KeyProp' is declared — the sidecar key frames are " +
+          "bound to the declared key; restore the property"))
+    val readSchema = schema.getOrElse(
+      SchemaEvolution.readTableWidened(spark, snapshotDir).schema)
+    val tombstoned = PosDeletes.affectedFiles(pos)
+    files.getOrElse(graft.plans.ZoneMap.dataFileCensus(spark, snapshotDir))
+      .groupBy(f => (eq.filter(_.census.contains(f)), tombstoned(f)))
+      .toSeq.sortBy(_._2.head)
+      .map { case ((applicable, dirty), fs) =>
+        val df = spark.read.schema(readSchema)
+          .parquet(fs.map(f => s"$snapshotDir/$f"): _*)
+        val live = if (dirty) df.filter(PosDeletes.live(pos)) else df
+        applicable.foldLeft(live) { (acc, sc) =>
+          val kc = sc.storedKeyCols.getOrElse(keyCols)
+          acc.join(readKeyFrame(spark, sc).toDF(kc: _*), kc, "left_anti")
+        }
+      }
+      .reduceOption(_.unionByName(_))
+      .getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        readSchema))
+  }
 
   /** One sidecar's key frame with its schema served DRIVER-SIDE from the
     * (memoized) footer instead of a per-construction Spark inference job
@@ -304,7 +371,7 @@ private[graft] object EqDeletes {
       .filter(p => Files.isDirectory(p))
       .toSeq.sortBy(_.getFileName.toString)
       .map { d =>
-        val census = Files.readAllLines(d.resolve("census.txt"))
+        val census = Files.readAllLines(d.resolve(CensusFile))
           .asScala.filter(_.nonEmpty).toSet
         Sidecar(d, census)
       }
@@ -314,53 +381,18 @@ private[graft] object EqDeletes {
   /** Write one sidecar into a STAGED version dir. `keys` is a frame of
     * the matched key values (non-null, columns in declared key order);
     * `census` the relative data-file names the delete applies to. The
-    * key signature (the frame's own column names) is recorded in
-    * `keycols.txt` so a historical read never rebinds the frame to a
-    * later key declaration ([[Sidecar.storedKeyCols]]).
+    * key signature (the frame's own column names) is recorded too, so a
+    * historical read never rebinds the frame to a later key declaration
+    * ([[Sidecar.storedKeyCols]]).
     */
   def write(stagedDir: String, keys: DataFrame, census: Seq[String]): Unit = {
-    val d = Paths.get(stagedDir, Dir,
-      s"d${System.nanoTime()}-${java.util.UUID.randomUUID()}")
-    Files.createDirectories(d)
+    val d = newSidecarDir(Paths.get(stagedDir))
     // `format(...).save`, not `.parquet(path)`: this job's call site
     // then names a write — a job list classifying call sites by reader
     // method (`parquet at ...`) would count it as schema inference
     keys.coalesce(1).write.mode(SaveMode.Overwrite).format("parquet")
-      .save(d.resolve("keys.parquet").toString)
-    Files.write(d.resolve(KeyColsFile),
-      keys.columns.mkString("\n").getBytes("UTF-8"))
-    Files.write(d.resolve("census.txt"),
-      census.sorted.mkString("\n").getBytes("UTF-8"))
-  }
-
-  /** The folded view of a snapshot — every pending sidecar applied as a
-    * broadcast LEFT ANTI join scoped to its census (the fold's own read;
-    * catalog SCANS use the reader-level filter instead). Composite keys
-    * anti-join on every key column. Each sidecar joins on the key
-    * signature it was WRITTEN under ([[Sidecar.storedKeyCols]]) — a
-    * historical version's sidecar must delete by ITS key columns even
-    * if the table was since re-keyed (advice finding); `keyCols` is the
-    * fallback for pre-signature sidecars, whose frames are positional
-    * in declared order.
-    */
-  def foldedRead(spark: SparkSession, snapshotDir: String,
-      keyCols: Seq[String]): DataFrame = {
-    val sidecars = pending(snapshotDir)
-    val all = graft.plans.ZoneMap.dataFileCensus(spark, snapshotDir)
-    val base = SchemaEvolution.readTableWidened(spark, snapshotDir)
-    if (sidecars.isEmpty) return base
-    bySignature(all, sidecars).map { case (files, applicable) =>
-      val df = spark.read.schema(base.schema)
-        .parquet(files.map(f => s"$snapshotDir/$f"): _*)
-      applicable.foldLeft(df) { (acc, sc) =>
-        val kc = sc.storedKeyCols.getOrElse(keyCols)
-        // no dropDuplicates: LEFT ANTI only tests existence — deduping
-        // cost an aggregate+exchange stage per sidecar per fold
-        acc.join(broadcast(readKeyFrame(spark, sc)
-          .toDF(kc: _*)),
-          kc, "left_anti")
-      }
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+      .save(keysDir(d).toString)
+    writeSidecarMeta(d, keys.columns.toSeq, census)
   }
 
   /** Group the snapshot's data files by WHICH sidecars apply to each —
@@ -372,6 +404,14 @@ private[graft] object EqDeletes {
     allFiles.groupBy(f => sidecars.filter(_.census.contains(f)))
       .toSeq.map { case (applicable, files) => (files, applicable) }
       .sortBy(_._1.headOption.getOrElse(""))
+
+  /** (unaffected, affected): the data files no sidecar's census names,
+    * and the rest — the line between the stock columnar scan and the
+    * key-probing one, and between the fold's carried and rewritten files.
+    */
+  def affectedSplit(allFiles: Seq[String], sidecars: Seq[Sidecar])
+      : (Seq[String], Seq[String]) =
+    allFiles.partition(f => !sidecars.exists(_.census.contains(f)))
 
   /** Fold every pending sidecar into one committed rewrite: affected
     * files rewrite minus their deleted keys, unaffected files carry by
@@ -387,8 +427,8 @@ private[graft] object EqDeletes {
   def fold(spark: SparkSession, wh: Warehouse, table: String): Boolean = {
     if (!anyPending(wh.snapshotPath(table))) return false
     val props = TableProps.read(wh, table)
-    val keyColsOpt = keyColsOf(props)
-    require(pending(wh.snapshotPath(table)).isEmpty || keyColsOpt.isDefined,
+    require(pending(wh.snapshotPath(table)).isEmpty ||
+        keyColsOf(props).isDefined,
       s"'$table' has pending equality deletes but no '$KeyProp'")
     wh.retryingConflicts() {
       val expect = wh.currentVersion(table)
@@ -399,12 +439,9 @@ private[graft] object EqDeletes {
         val all = graft.plans.ZoneMap.dataFileCensus(spark, snap)
         // a file folds when ANY sidecar kind touches it: named in an
         // equality census, or carrying positional tombstones
-        val posAffected = PosDeletes.affectedFiles(snap)
-        val groups = bySignature(all, sidecars)
-        val untouched = groups.collect { case (fs, a) if a.isEmpty => fs }
-          .flatten.filterNot(posAffected)
+        val untouched = affectedSplit(all, sidecars)._1
+          .filterNot(PosDeletes.affectedFiles(posDirs))
         val affected = all.filterNot(untouched.toSet)
-        val schema = SchemaEvolution.readTableWidened(spark, snap).schema
         // lazy: the staged write streams survivors straight from the
         // PINNED snapshot's immutable files (merge-on-read tables are
         // always versioned) — no localCheckpoint materialization pass.
@@ -412,8 +449,7 @@ private[graft] object EqDeletes {
         // shaped (isSnapshotRace) and retried by retryingConflicts.
         val survivors =
           if (affected.isEmpty) None
-          else Some(PosDeletes.logicalRead(spark, snap, schema, keyColsOpt,
-            filesSubset = Some(affected)))
+          else Some(logicalMorRead(spark, snap, props, Some(affected)))
         val markers = Tables.readRootMarkers(snap)
         beforeFoldCommit()
         wh.commit(table, expectCurrent = expect) { staged =>
@@ -425,7 +461,8 @@ private[graft] object EqDeletes {
           if (survivors.isEmpty && untouched.isEmpty)
             spark.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              schema).repartition(1).write
+              SchemaEvolution.readTableWidened(spark, snap).schema)
+              .repartition(1).write
               .mode(SaveMode.Append).parquet(staged)
           Tables.writeRootMarkers(markers, staged)
           // neither sidecar kind carries (the fold consumed them); no
@@ -665,8 +702,7 @@ private[sources] class EqDeleteScanBuilder(tableName: String,
     // twin rule ([[SplitEqDeleteScanRelations]]) needs to restore the
     // Union shape — the round-16 split, unconditional on session wiring
     val splitSpec = if (filesOverride.isDefined) None else {
-      val unaffected = groups.collect { case (fs, a) if a.isEmpty => fs }.flatten
-      val affected = groups.collect { case (fs, a) if a.nonEmpty => fs }.flatten
+      val (unaffected, affected) = EqDeletes.affectedSplit(all, sidecars)
       if (unaffected.isEmpty || affected.isEmpty) None
       else Some(EqDeleteSplitSpec(tableName, baseDir, tableSchema, keyCols,
         options, sidecars, recorded, pruned, unaffected, affected))

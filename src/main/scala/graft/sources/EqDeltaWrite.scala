@@ -108,10 +108,8 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       val spark = SparkSession.active
       legacyMoved = wh.migrateLegacy(table)
       stage = wh.allocateStage(table)
-      sidecarDir = stage.resolve(EqDeletes.Dir)
-        .resolve(s"d${System.nanoTime()}-${UUID.randomUUID()}")
-      java.nio.file.Files.createDirectories(
-        sidecarDir.resolve("keys.parquet"))
+      sidecarDir = EqDeletes.newSidecarDir(stage)
+      java.nio.file.Files.createDirectories(EqDeletes.keysDir(sidecarDir))
       def prepared(s: StructType) = {
         val job = Job.getInstance(spark.sessionState.newHadoopConf())
         val f = ParquetUtils.prepareWrite(spark.sessionState.conf, job, s,
@@ -122,7 +120,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       val (rowF, rowC) = prepared(schema)
       val (keyF, keyC) = prepared(keySchema)
       new MorDeltaWriterFactory(stage.toString,
-        sidecarDir.resolve("keys.parquet").toString,
+        EqDeletes.keysDir(sidecarDir).toString,
         schema, keySchema, rowF, rowC, keyF, keyC)
     }
 
@@ -166,7 +164,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
         } finally s.close()
       }
       prune(stage, dataCommitted)
-      prune(sidecarDir.resolve("keys.parquet"), keyCommitted)
+      prune(EqDeletes.keysDir(sidecarDir), keyCommitted)
       // the census is the PINNED snapshot's file set — captured before
       // the carry so the new data files stay outside it (a reinserted
       // key's row is visible past its own delete record) — NARROWED to
@@ -179,7 +177,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       val census = EqDeletes.narrowedCensus(spark, pinnedDir, keyCols,
         keySchema.map(_.dataType),
         spark.read.schema(keySchema)
-          .parquet(sidecarDir.resolve("keys.parquet").toString)
+          .parquet(EqDeletes.keysDir(sidecarDir).toString)
           .collect().map(r => keyCols.indices.map(r.get)).toIndexedSeq,
         nKeys, all)
       // carry source: on MAIN the freshest published version below the
@@ -200,13 +198,9 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
         val zm = stage.resolve("_zonemap")
         if (java.nio.file.Files.isDirectory(zm))
           Tables.deleteRecursively(zm)
-        java.nio.file.Files.write(sidecarDir.resolve("census.txt"),
-          census.sorted.mkString("\n").getBytes("UTF-8"))
-        // key signature: pin the frame's identity columns at write time
-        // (see EqDeletes.Sidecar.storedKeyCols)
-        java.nio.file.Files.write(
-          sidecarDir.resolve(EqDeletes.KeyColsFile),
-          keyCols.mkString("\n").getBytes("UTF-8"))
+        // the key signature pins the frame's identity columns at write
+        // time (see EqDeletes.Sidecar.storedKeyCols)
+        EqDeletes.writeSidecarMeta(sidecarDir, keyCols, census)
       } else {
         // pure-insert delta (a MERGE with only NOT MATCHED rows): a
         // plain fast append, no sidecar

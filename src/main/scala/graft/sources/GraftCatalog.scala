@@ -753,9 +753,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             s"cannot declare ${EqDeletes.ModeProp}=merge-on-read on '$t'")
         }
         // RE-KEYING while equality sidecars pend would rebind the stored
-        // key frames to different columns — foldedRead renames the
-        // sidecar frame POSITIONALLY to the declared names, so a
-        // same-arity re-key silently deletes wrong rows (review finding)
+        // key frames to different columns — the catalog scan probes
+        // frames by the declared names, and a pre-signature frame binds
+        // POSITIONALLY to them, so a same-arity re-key silently deletes
+        // wrong rows (review finding)
         if (s.property == EqDeletes.KeyProp &&
             !TableProps.read(wh, t).get(EqDeletes.KeyProp).contains(s.value))
           require(wh.publishedVersions(t).forall { case (_, dir) =>
@@ -2006,9 +2007,9 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
     */
   private[sources] def posDeleteLogical(): Option[DataFrame] =
     if (posDeletePending.isEmpty) None
-    else Some(PosDeletes.logicalRead(SparkSession.active,
-      delegate.paths.head, delegate.schema,
-      EqDeletes.keyColsOf(TableProps.read(wh, tableName))))
+    else Some(EqDeletes.logicalMorRead(SparkSession.active,
+      delegate.paths.head, TableProps.read(wh, tableName),
+      schema = Some(delegate.schema)))
 
   /** The [[SplitEqDeleteScans]] seam: when sidecars pend AND the census
     * splits into both unaffected and affected files, return
@@ -2024,9 +2025,7 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
     val baseDir = delegate.paths.head
     val all = graft.plans.ZoneMap.dataFileCensus(
       org.apache.spark.sql.SparkSession.active, baseDir)
-    val groups = EqDeletes.bySignature(all, sidecars)
-    val unaffected = groups.collect { case (fs, a) if a.isEmpty => fs }.flatten
-    val affected = groups.collect { case (fs, a) if a.nonEmpty => fs }.flatten
+    val (unaffected, affected) = EqDeletes.affectedSplit(all, sidecars)
     if (unaffected.isEmpty || affected.isEmpty) None
     else Some((unaffected, affected, sidecars, eqDeleteKeyCols, baseDir))
   }
@@ -2221,10 +2220,7 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
           s"'$tableName' has no branch '$branch'"))._1
       val headDir = wh.branchSnapshotDir(tableName, branch)
       val head = headDir.toString
-      val base =
-        if (EqDeletes.anyPending(head))
-          EqDeletes.logicalMorRead(spark, head, props)
-        else SchemaEvolution.readTableWidened(spark, head)
+      val base = EqDeletes.logicalMorRead(spark, head, props)
       val sidecarSettled = morKeys.exists { ks =>
         val matched = EqDeletes.matchedKeys(base, pred, ks)
         if (matched.nullKeys > 0 || matched.n > EqDeletes.MaxKeys) {
@@ -2461,12 +2457,9 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
           // FOLDED base when sidecars are pending (the huge-delete
           // fallback from morDelete): a raw read would resurrect the
           // deleted keys
-          val base =
-            if (sidecarsPending)
-              EqDeletes.logicalMorRead(spark, snap,
-                TableProps.read(wh, tableName))
-            else SchemaEvolution.readTableWidened(spark, snap)
-          val survivors = base.filter(not(coalesce(pred, lit(false))))
+          val survivors = EqDeletes.logicalMorRead(spark, snap,
+              TableProps.read(wh, tableName))
+            .filter(not(coalesce(pred, lit(false))))
           wh.commit(tableName, expectCurrent = expected) { staged =>
             survivors.write
               .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staged)
@@ -2530,7 +2523,7 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
       val pinned = branchCtx.map(_._3).getOrElse(delegate.paths.head)
       // POSITIONAL tombstones pending (round 18 — deltas STACK over
       // them, same census rule as equality): the operation's scan routes
-      // through [[PosDeletes.logicalRead]] (the [[PosDeltaTargetScan]]
+      // through [[EqDeletes.logicalMorRead]] (the [[PosDeltaTargetScan]]
       // marker spliced by the catalog-registered rule), so tombstoned
       // rows never re-match as live; the new equality sidecar stays
       // census-scoped to the pinned snapshot and ordinals stay valid
@@ -2573,7 +2566,7 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
               // (equality composes beneath the ordinal probe)
               new ScanBuilder {
                 override def build(): Scan = new PosDeltaTargetScan(
-                  tableName, pinned, GraftTable.this.schema(), keyCols)
+                  tableName, pinned, GraftTable.this.schema(), morProps)
               }
             else if (sidecars.nonEmpty)
               new EqDeleteScanBuilder(tableName, pinned,

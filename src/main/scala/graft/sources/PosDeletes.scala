@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** POSITIONAL delete files (Iceberg v2's position deletes on plain
@@ -30,14 +30,14 @@ import org.apache.spark.sql.functions._
   * (idempotent: content per file is deterministic, the landing move is
   * atomic-replace). The READ probes per TASK: the affected-file scan
   * projects parquet's native `_metadata.row_index` and filters through
-  * [[posDeletedUdf]], whose executor-side cache loads one file's sorted
+  * [[live]], whose executor-side cache loads one file's sorted
   * ordinal array (bounded by rows-per-file) and binary-searches — the
   * Iceberg read: delete files apply where their data file is scanned.
   *
   * Reads of a posdelete-bearing snapshot go through the LOGICAL plan
-  * ([[logicalRead]], spliced in by the same rules that split
-  * equality-pending scans); `CALL compact` folds both sidecar kinds
-  * back to a plain snapshot.
+  * ([[EqDeletes.logicalMorRead]], which applies both sidecar kinds and
+  * is spliced in by the same rules that split equality-pending scans);
+  * `CALL compact` folds both sidecar kinds back to a plain snapshot.
   */
 private[graft] object PosDeletes {
 
@@ -53,9 +53,9 @@ private[graft] object PosDeletes {
     finally s.close()
   }
 
-  /** Data-file names (relative, flat) any pending tombstone touches. */
-  def affectedFiles(snapshotDir: String): Set[String] =
-    pending(snapshotDir).flatMap { d =>
+  /** Data-file names (relative, flat) the given tombstone dirs touch. */
+  def affectedFiles(sidecarDirs: Seq[Path]): Set[String] =
+    sidecarDirs.flatMap { d =>
       val s = Files.list(d)
       try s.iterator().asScala.map(_.getFileName.toString)
         .filter(_.endsWith(".pos"))
@@ -182,73 +182,14 @@ private[graft] object PosDeletes {
     sidecarDirs.exists(d =>
       java.util.Arrays.binarySearch(ordinalsOf(d, file), pos) >= 0)
 
-  /** The logical read of a snapshot with pending POSITIONAL deletes
-    * (and, stacked beneath them, any pending equality sidecars): clean
-    * files on the stock vectorized path, tombstoned files through a
-    * `_metadata.row_index` projection + the per-task ordinal probe,
-    * equality sidecars applied as their usual census-scoped anti-joins.
-    * This IS the scan — the plan-split rules splice it in for catalog
-    * reads, and fold/DML paths call it directly.
+  /** Keeps the rows no tombstone under `sidecarDirs` names: the
+    * per-task ordinal probe on parquet's `_metadata.file_name` and
+    * `_metadata.row_index` (flat snapshot dirs only — the writer refuses
+    * nested layouts). Deterministic: snapshot sidecars are immutable.
     */
-  def logicalRead(spark: SparkSession, snapshotDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      eqKeyCols: Option[Seq[String]],
-      filesSubset: Option[Seq[String]] = None): DataFrame = {
-    val all = filesSubset.getOrElse(
-      graft.plans.ZoneMap.dataFileCensus(spark, snapshotDir))
-    val eq = EqDeletes.pending(snapshotDir)
-    def withEq(df: DataFrame, files: Seq[String]): DataFrame =
-      if (eq.isEmpty) df
-      else {
-        val ks = eqKeyCols.getOrElse(throw new IllegalStateException(
-          s"$snapshotDir carries equality sidecars but no declared key"))
-        // per-signature scoping preserved: a sidecar applies to a file
-        // only when its census names it — group exactly like foldedRead
-        // NO broadcast() hint here: this plan splices into another
-        // query mid-optimization, where a ResolvedHint node would
-        // survive past EliminateResolvedHint and fail the planner — the
-        // key frames are ≤ MaxKeys rows, so AQE broadcasts them anyway
-        EqDeletes.bySignature(files, eq).map { case (fs, applicable) =>
-          val part = df.filter(col("_gf_file").isin(fs: _*))
-          applicable.foldLeft(part) { (acc, sc) =>
-            // no dropDuplicates: LEFT ANTI only tests existence, so
-            // duplicate build-side keys change nothing — deduping cost
-            // an aggregate+exchange stage per sidecar per scan.
-            // explicit footer schema: a bare read.parquet runs one
-            // schema-inference JOB per sidecar per plan construction
-            acc.join(EqDeletes.readKeyFrame(spark, sc)
-              .toDF(ks: _*), ks, "left_anti")
-          }
-        }.reduce(_.unionByName(_))
-      }
-    val tombstoned = affectedFiles(snapshotDir)
-    val dirty = all.filter(tombstoned)
-    val clean = all.filterNot(tombstoned)
-    val sidecarDirs = pending(snapshotDir).map(_.toString)
-    // deterministic: snapshot sidecars are immutable
-    val probe = udf((file: String, pos: Long) =>
-      !deletedAt(sidecarDirs, file, pos))
-    // _gf_file: the file NAME (flat snapshot dirs only — the writer
-    // refuses nested layouts), used by the probe and the eq grouping
-    def named(files: Seq[String]): DataFrame =
-      spark.read.schema(schema).parquet(files.map(f => s"$snapshotDir/$f"): _*)
-        .withColumn("_gf_file",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-    val cleanDf =
-      if (clean.isEmpty) None
-      else Some(withEq(named(clean), clean))
-    val dirtyDf =
-      if (dirty.isEmpty) None
-      else Some(withEq(
-        named(dirty)
-          .withColumn("_gf_pos", col("_metadata.row_index"))
-          .filter(probe(col("_gf_file"), col("_gf_pos")))
-          .drop("_gf_pos"),
-        dirty))
-    (cleanDf ++ dirtyDf)
-      .reduceOption(_.unionByName(_))
-      .map(_.drop("_gf_file"))
-      .getOrElse(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
+  def live(sidecarDirs: Seq[Path]): Column = {
+    val dirs = sidecarDirs.map(_.toString)
+    val probe = udf((file: String, pos: Long) => !deletedAt(dirs, file, pos))
+    probe(col("_metadata.file_name"), col("_metadata.row_index"))
   }
 }

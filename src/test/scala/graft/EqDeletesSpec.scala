@@ -68,10 +68,10 @@ class EqDeletesSpec extends SparkTestBase {
     assert(dataFiles(snap) == v1Files,
       "a merge-on-read delete must not rewrite data files")
 
-    // the read tax pays off correctly: SQL scan == foldedRead == model
+    // the read tax pays off correctly: SQL scan == logical read == model
     val expect = base.filterNot(_._2 == "del").toSet
     assert(visible(cat) == expect)
-    assert(EqDeletes.foldedRead(spark, snap, Seq("id"))
+    assert(EqDeletes.logicalMorRead(spark, snap, Map(EqDeletes.KeyProp -> "id"))
       .select("id", "grp", "v").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet == expect)
     // aggregate pushdown is suppressed: a footer-credited count would
@@ -213,7 +213,7 @@ class EqDeletesSpec extends SparkTestBase {
       ((3L, "back", 3.5)) + ((6L, "back", 6.5)) + ((100L, "new", 100.0))) --
       Set((3L, "back", 3.5), (10L, "keep", 10.0))
     assert(visible(cat) == expect)
-    assert(EqDeletes.foldedRead(spark, snap, Seq("id"))
+    assert(EqDeletes.logicalMorRead(spark, snap, Map(EqDeletes.KeyProp -> "id"))
       .select("id", "grp", "v").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet == expect)
   }
@@ -874,7 +874,8 @@ class EqDeletesSpec extends SparkTestBase {
       "rows sharing sid=1 or oid=2 with the deleted tuple must survive")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").head.getLong(0) ==
       expect.size.toLong)
-    assert(EqDeletes.foldedRead(spark, snap, Seq("sid", "oid"))
+    assert(EqDeletes.logicalMorRead(spark, snap,
+        Map(EqDeletes.KeyProp -> "sid,oid"))
       .select("sid", "oid", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet == expect)
 
@@ -1027,8 +1028,9 @@ class EqDeletesSpec extends SparkTestBase {
       .map { case (i, g, v) => (i, g, if (i == 2) v + 1000 else v) }.toSet
     def served(df: DataFrame) = df.select("id", "grp", "v").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    // foldedRead under the NEW declared key: stored signatures win
-    assert(served(EqDeletes.foldedRead(spark, snap, Seq("grp"))) == expect,
+    // the logical read under the NEW declared key: stored signatures win
+    assert(served(EqDeletes.logicalMorRead(spark, snap,
+        Map(EqDeletes.KeyProp -> "grp"))) == expect,
       "a re-key rebound historical sidecar frames to the wrong columns")
     // the shared logical read (between()/branchDiff/cherrypick hops all
     // route through it) serves the same content
@@ -1044,13 +1046,40 @@ class EqDeletesSpec extends SparkTestBase {
       .takeWhile(_ != null).exists(x => Option(x.getMessage)
         .exists(_.contains("bound to a different key"))),
       s"the scan must refuse the signature mismatch: ${eScan.getMessage}")
+    // a positional tombstone stacked over the same two sidecars (the
+    // NULL-key row route): the logical read still applies each sidecar
+    // by its WRITTEN key beside the ordinal probe, not the declared one
+    TableProps.write(wh, "t",
+      TableProps.read(wh, "t") + (EqDeletes.KeyProp -> "id"))
+    wh.appendVersioned(spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(
+        null, "null-grp", 777.0)),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("grp",
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("v",
+          org.apache.spark.sql.types.DoubleType))))
+      .localCheckpoint(true), "t")
+    spark.sql(s"DELETE FROM $cat.t WHERE grp = 'null-grp'")
+    val posSnap = wh.snapshotPath("t")
+    assert(graft.sources.PosDeletes.pending(posSnap).size == 1 &&
+      EqDeletes.pending(posSnap).size == 2)
+    TableProps.write(wh, "t",
+      TableProps.read(wh, "t") + (EqDeletes.KeyProp -> "grp"))
+    assert(served(EqDeletes.logicalMorRead(spark, posSnap,
+      TableProps.read(wh, "t"))) == expect,
+      "beside a positional tombstone, sidecar frames rebound to the " +
+        "declared key")
     // pre-signature sidecars still fall back to the declared key: strip
     // the marker files and restore the declaration
     sidecars.foreach(sc => java.nio.file.Files.deleteIfExists(
       sc.dir.resolve(EqDeletes.KeyColsFile)))
     TableProps.write(wh, "t",
       TableProps.read(wh, "t") + (EqDeletes.KeyProp -> "id"))
-    assert(served(EqDeletes.foldedRead(spark, snap, Seq("id"))) == expect)
+    assert(served(EqDeletes.logicalMorRead(spark, snap,
+      Map(EqDeletes.KeyProp -> "id"))) == expect)
   }
 
   test("internalKeySets survives a cache-bound clear on a mixed hit+miss call (advice finding: hits mapped to null after clear)") {
