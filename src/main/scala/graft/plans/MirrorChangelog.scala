@@ -344,11 +344,13 @@ object MirrorChangelog {
       // CherrypickMarker (advice finding)
       outVersion = if (sidecarable) {
         val all = graft.plans.ZoneMap.dataFileCensus(spark, curDir)
+        // one collect serves the census narrowing, the sidecar write
+        // and the key-set cache
+        val touchedKeys = EqDeletes.collectKeys(touched)
         val census = EqDeletes.narrowedCensus(spark, curDir, keys,
-          keyTypes,
-          touched.collect().map(r => keys.indices.map(r.get)).toIndexedSeq,
-          nTouched, all)
-        wh.commit(name, expectCurrent = Some(expect)) { staged =>
+          keyTypes, touchedKeys.values, nTouched, all)
+        var sidecar = ""
+        val v = wh.commit(name, expectCurrent = Some(expect)) { staged =>
           wh.carryPreviousInto(name, java.nio.file.Paths.get(staged))
           // the carried manifest turns stale (this commit adds files
           // outside the census and deletes rows) — drop it, the next
@@ -356,11 +358,13 @@ object MirrorChangelog {
           val zm = java.nio.file.Paths.get(staged, "_zonemap")
           if (java.nio.file.Files.isDirectory(zm))
             Tables.deleteRecursively(zm)
-          EqDeletes.write(staged, touched, census)
+          sidecar = EqDeletes.write(staged, touchedKeys, census)
           additions.write.mode(org.apache.spark.sql.SaveMode.Append)
             .parquet(staged)
           stamp(staged)
         }
+        EqDeletes.seedKeySet(sidecar, touchedKeys)
+        v
       } else {
         val survivors = mainCur.join(touched, keys, "left_anti")
         val merged = survivors.unionByName(additions)

@@ -4,9 +4,17 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedAttribute}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.{BooleanType, DataType, NumericType, StructType}
 
 import graft.sources.Tables.{TableProps, Warehouse}
 
@@ -65,8 +73,10 @@ private[graft] object EqDeletes {
     props.get(KeyProp).map(_.trim).filter(_.nonEmpty)
       .map(graft.CdcConfig.parseKeyCols)
 
-  /** Above this many matched keys a COW rewrite is the better plan (and
-    * the sidecar's broadcast fold would stop being "small side").
+  /** Above this many matched keys a sidecar stops being small metadata:
+    * its key set is collected to the driver, written from there and
+    * shipped inside every affected read's probe filter. A DELETE past it
+    * takes the positional sidecar; a MERGE past it refuses.
     */
   val MaxKeys = 1000000L
 
@@ -254,30 +264,72 @@ private[graft] object EqDeletes {
         .getOrElse(all)
     }
 
-  /** A DELETE's matched key set: `keys` the distinct non-null key
-    * tuples (columns in declared key order, a checkpointed frame), `n`
-    * their count, `nullKeys` the distinct matched tuples with a NULL
-    * component — an equality sidecar cannot identify those rows.
+  /** A DELETE's matched key set, collected to the driver: `rows` the
+    * distinct non-null key tuples (columns of `schema`, declared key
+    * order) as internal rows, `n` their count, `nullKeys` the distinct
+    * matched tuples with a NULL component — an equality sidecar cannot
+    * identify those rows. Past [[MaxKeys]] the collect stops, so `n` or
+    * `nullKeys` is then a lower bound; either one routes the DELETE to
+    * the positional sidecar.
     */
-  final case class MatchedKeys(keys: DataFrame, n: Long, nullKeys: Long) {
-    def rows: IndexedSeq[Seq[Any]] = keys.collect().map(_.toSeq).toIndexedSeq
+  final case class MatchedKeys(schema: StructType, rows: IndexedSeq[InternalRow],
+      nullKeys: Long) {
+    def n: Long = rows.size.toLong
+    def keyTypes: Seq[DataType] = schema.map(_.dataType)
+    /** External (Scala) values per tuple, for census narrowing. */
+    def values: IndexedSeq[Seq[Any]] = {
+      val convs = keyTypes.map(CatalystTypeConverters.createToScalaConverter)
+      rows.map(r => convs.indices.map(i => convs(i)(r.get(i, keyTypes(i)))))
+    }
+    /** The probe set the written sidecar loads as. */
+    def keySet: java.util.HashSet[Any] = {
+      val set = new java.util.HashSet[Any]()
+      rows.foreach(r => set.add(probeKey(keyTypes.size, i => r.get(i, keyTypes(i)))))
+      set
+    }
   }
 
-  /** Build a DELETE's matched key set ONCE: the rows of `logical`
-    * matching `pred`, projected to the key and deduplicated BEFORE one
-    * local checkpoint, both counts from one aggregate over it — the
-    * sidecar's collect and write then read the checkpoint instead of
-    * re-running the dedupe shuffle per consumer.
+  /** Build a DELETE's matched key set: the rows of `logical` matching
+    * `pred`, projected to the key and deduplicated, in one collect.
     */
-  def matchedKeys(logical: DataFrame, pred: Column, keyCols: Seq[String]): MatchedKeys = {
-    val anyNull = keyCols.map(c => col(c).isNull).reduce(_ || _)
-    val distinct = logical.filter(coalesce(pred, lit(false)))
-      .select(keyCols.map(col): _*).dropDuplicates(keyCols)
-      .localCheckpoint(true)
-    val counts = distinct.agg(count(when(anyNull, 1)), count(lit(1))).head()
-    val nulls = counts.getLong(0)
-    MatchedKeys(distinct.filter(!anyNull), counts.getLong(1) - nulls, nulls)
+  def matchedKeys(logical: DataFrame, pred: Column, keyCols: Seq[String]): MatchedKeys =
+    collectKeys(logical.filter(coalesce(pred, lit(false)))
+      .select(keyCols.map(col): _*).dropDuplicates(keyCols))
+
+  /** Collect a frame of DISTINCT key tuples to the driver, at most
+    * [[MaxKeys]] + 1 of them, as internal rows with their values copied
+    * out of the result buffers.
+    */
+  def collectKeys(distinct: DataFrame): MatchedKeys = {
+    val qe = distinct.limit((MaxKeys + 1).toInt).queryExecution
+    val types = distinct.schema.map(_.dataType)
+    val collected = SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+    val (nulls, keys) = collected.toIndexedSeq.map { r =>
+      InternalRow.fromSeq(types.indices.map(i =>
+        if (r.isNullAt(i)) null else InternalRow.copyValue(r.get(i, types(i)))))
+    }.partition(r => types.indices.exists(r.isNullAt))
+    MatchedKeys(distinct.schema, keys, nulls.size.toLong)
   }
+
+  /** The probe element of one key tuple — the single value, or a `List`
+    * of the components in declared order (structural equality) — or
+    * null when any component is NULL: SQL equality can never have
+    * matched that row, so every probe keeps it.
+    */
+  private[sources] def probeKey(n: Int, component: Int => Any): Any =
+    if (n == 1) component(0)
+    else {
+      var i = n - 1
+      var acc: List[Any] = Nil
+      while (i >= 0) {
+        val v = component(i)
+        if (v == null) return null
+        acc = v :: acc
+        i -= 1
+      }
+      acc
+    }
 
   /** Any pending merge-on-read sidecar — equality OR positional
     * ([[PosDeletes]]): the gate every raw-read/rewrite path checks.
@@ -293,18 +345,14 @@ private[graft] object EqDeletes {
     * tombstones). Data files group by (applicable equality sidecars,
     * carries tombstones?) and each group reads as ONE relation over
     * exactly its files: tombstoned groups drop the ordinals their `.pos`
-    * files name ([[PosDeletes.live]]), and each applicable equality
-    * sidecar LEFT-ANTI joins on the key signature it was WRITTEN under
-    * ([[Sidecar.storedKeyCols]]; the declared key for pre-signature
-    * frames, which are positional in declared order) — a historical
-    * sidecar deletes by ITS columns even after an API-level re-key.
-    *
-    * No `broadcast()` hint: this plan splices into another query
-    * mid-optimization ([[SplitEqDeleteScans.spliceLogical]]), where a
-    * ResolvedHint node would survive past EliminateResolvedHint and fail
-    * the planner; the key frames are ≤ [[MaxKeys]] rows, so size-based
-    * join selection broadcasts them anyway. No dropDuplicates on the
-    * frames either: LEFT ANTI only tests existence.
+    * files name ([[PosDeletes.live]]), and the applicable equality
+    * sidecars filter through one driver-built [[EqDeleteProbe]] per key
+    * signature they were WRITTEN under ([[Sidecar.storedKeyCols]]; the
+    * declared key for pre-signature frames, which are positional in
+    * declared order) — a historical sidecar deletes by ITS columns even
+    * after an API-level re-key. The probe sets come from the
+    * [[internalKeySets]] cache, so a read whose sidecars are cached runs
+    * no Spark job for them.
     *
     * `files` restricts the read to those data files (the fold's affected
     * region); `schema` replaces the widened footer schema (a catalog
@@ -337,30 +385,23 @@ private[graft] object EqDeletes {
         val df = spark.read.schema(readSchema)
           .parquet(fs.map(f => s"$snapshotDir/$f"): _*)
         val live = if (dirty) df.filter(PosDeletes.live(pos)) else df
-        applicable.foldLeft(live) { (acc, sc) =>
-          val kc = sc.storedKeyCols.getOrElse(keyCols)
-          acc.join(readKeyFrame(spark, sc).toDF(kc: _*), kc, "left_anti")
-        }
+        applicable.groupBy(_.storedKeyCols.getOrElse(keyCols)).toSeq
+          .sortBy(_._1.mkString(","))
+          .foldLeft(live) { case (acc, (kc, scs)) =>
+            val types = kc.map(c => readSchema.find(_.name.equalsIgnoreCase(c))
+              .getOrElse(throw new IllegalStateException(
+                s"$snapshotDir: sidecar key column '$c' is not in the " +
+                  s"read schema ${readSchema.simpleString}")).dataType)
+            acc.filter(GraftSqlBridge.column(EqDeleteProbe(
+              kc.map(c => UnresolvedAttribute.quoted(c)), types,
+              new EqDeleteProbe.Keys(internalKeySet(spark, scs, types), scs.size))))
+          }
       }
       .reduceOption(_.unionByName(_))
       .getOrElse(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](),
         readSchema))
   }
-
-  /** One sidecar's key frame with its schema served DRIVER-SIDE from the
-    * (memoized) footer instead of a per-construction Spark inference job
-    * — a stack of k pending sidecars read by a fold/logical plan paid k
-    * inference jobs per statement before round 21. Falls back to the
-    * inferring read when the footer shortcut declines (multi-schema or
-    * unreadable — cannot happen for frames this engine writes).
-    */
-  private[sources] def readKeyFrame(spark: SparkSession,
-      sc: Sidecar): DataFrame =
-    SchemaEvolution.uniformFooterSchema(spark, sc.keysPath) match {
-      case Some(s) => spark.read.schema(s).parquet(sc.keysPath)
-      case None => spark.read.parquet(sc.keysPath)
-    }
 
   /** Pending sidecars of a snapshot dir, oldest first. */
   def pending(snapshotDir: String): Seq[Sidecar] = {
@@ -378,21 +419,31 @@ private[graft] object EqDeletes {
     finally s.close()
   }
 
-  /** Write one sidecar into a STAGED version dir. `keys` is a frame of
-    * the matched key values (non-null, columns in declared key order);
-    * `census` the relative data-file names the delete applies to. The
-    * key signature (the frame's own column names) is recorded too, so a
+  /** Write one sidecar into a STAGED version dir from the driver: the
+    * key frame (one parquet part file under `keys.parquet/`, written
+    * through the same `OutputWriterFactory` the delta writer's tasks
+    * use), the key signature (the frame's own column names, so a
     * historical read never rebinds the frame to a later key declaration
-    * ([[Sidecar.storedKeyCols]]).
+    * — [[Sidecar.storedKeyCols]]) and `census`, the relative data-file
+    * names the delete applies to. Returns the sidecar dir's name, the
+    * identity [[seedKeySet]] caches its key set under.
     */
-  def write(stagedDir: String, keys: DataFrame, census: Seq[String]): Unit = {
+  def write(stagedDir: String, keys: MatchedKeys, census: Seq[String]): String = {
+    val spark = SparkSession.active
     val d = newSidecarDir(Paths.get(stagedDir))
-    // `format(...).save`, not `.parquet(path)`: this job's call site
-    // then names a write — a job list classifying call sites by reader
-    // method (`parquet at ...`) would count it as schema inference
-    keys.coalesce(1).write.mode(SaveMode.Overwrite).format("parquet")
-      .save(keysDir(d).toString)
-    writeSidecarMeta(d, keys.columns.toSeq, census)
+    val out = Files.createDirectories(keysDir(d))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(spark.sessionState.conf, job,
+      keys.schema, new ParquetOptions(Map.empty[String, String],
+        spark.sessionState.conf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("graft-eqdelete", 0, TaskType.MAP, 0, 0))
+    val w = factory.newInstance(out.resolve(
+      s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+        factory.getFileExtension(ctx)).toString, keys.schema, ctx)
+    try keys.rows.foreach(w.write) finally w.close()
+    writeSidecarMeta(d, keys.schema.fieldNames.toSeq, census)
+    d.getFileName.toString
   }
 
   /** Group the snapshot's data files by WHICH sidecars apply to each —
@@ -474,94 +525,127 @@ private[graft] object EqDeletes {
   }
 
   /** Per-sidecar deleted-key sets in CATALYST INTERNAL form, cached by
-    * sidecar dir (immutable once committed): the first scan after a
-    * stack of deletes loads every still-uncached set in ONE Spark job
+    * (sidecar dir NAME, key types). The name `d<nanos>-<uuid>` is
+    * globally unique and its content immutable, so the entry stays valid
+    * as every later commit re-links the sidecar into its own version
+    * dir; the types keep a set decoded under `int` from being probed
+    * with `bigint` values. The writers seed the entry of the sidecar
+    * they publish ([[seedKeySet]]); the first scan after a stack of
+    * foreign deletes loads every still-uncached set in ONE Spark job
     * (the per-sidecar `spark.read.collect` shape paid one full job —
     * scheduler overhead, not I/O — per sidecar per scan; 64 pending
     * sidecars made every table scan a 64-job planning storm, measured
     * in DeltaStress round 16). Bounded: sets past [[CacheableKeys]]
     * are rebuilt per scan instead of cached.
     */
-  private val keySetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.HashSet[Any]]()
+  private val keySetCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[DataType]), java.util.HashSet[Any]]()
   private val CacheableKeys = 100000
 
-  private[sources] def clearKeySetCache(): Unit = keySetCache.clear()
+  private[graft] def clearKeySetCache(): Unit = keySetCache.clear()
+
+  private def cacheKey(sc: Sidecar, keyTypes: Seq[DataType]) =
+    (sc.dir.getFileName.toString, keyTypes)
+
+  private def cachePut(key: (String, Seq[DataType]),
+      set: java.util.HashSet[Any]): Unit = {
+    // crude bound on ENTRY count too (folded sidecars leave stale
+    // entries behind): past it, start over rather than grow forever
+    if (keySetCache.size > 256) keySetCache.clear()
+    if (set.size <= CacheableKeys) keySetCache.put(key, set)
+  }
+
+  /** Cache the key set of the sidecar a writer just PUBLISHED as dir
+    * `dirName` from the keys it wrote, so the next read of it runs no
+    * key-load job.
+    */
+  def seedKeySet(dirName: String, keys: MatchedKeys): Unit =
+    if (keys.rows.size <= CacheableKeys)
+      cachePut((dirName, keys.keyTypes), keys.keySet)
 
   /** Load a signature group's deleted keys (union over its applicable
     * sidecars) in CATALYST INTERNAL form, ready for per-row probes.
     * Composite keys probe as `List[Any]` of the components in declared
-    * order (structural equality); single keys stay the raw value.
+    * order (structural equality); single keys stay the raw value. A
+    * single sidecar's cached set is returned as is: probes only read it.
     */
   def internalKeySet(spark: SparkSession, applicable: Seq[Sidecar],
-      keyTypes: Seq[org.apache.spark.sql.types.DataType])
-      : java.util.HashSet[Any] = {
-    val perSidecar = internalKeySets(spark, applicable, keyTypes)
-    val set = new java.util.HashSet[Any]()
-    perSidecar.values.foreach(set.addAll)
-    set
+      keyTypes: Seq[DataType]): java.util.HashSet[Any] = {
+    val perSidecar = internalKeySets(spark, applicable, keyTypes).values
+    if (perSidecar.size == 1) perSidecar.head
+    else {
+      val set = new java.util.HashSet[Any]()
+      perSidecar.foreach(set.addAll)
+      set
+    }
   }
 
-  /** Per-sidecar key sets for `sidecars`, loading all cache misses in
-    * one batched read.
+  /** Per-sidecar key sets for `sidecars` (keyed by sidecar dir path),
+    * loading all cache misses in one batched read. A frame stored under
+    * a narrower type than `keyTypes` (a read serving the key wider than
+    * it was written) loads through a numeric up-cast; any other
+    * mismatch fails loudly — a probe of differently typed values would
+    * silently match nothing.
     */
   def internalKeySets(spark: SparkSession, sidecars: Seq[Sidecar],
-      keyTypes: Seq[org.apache.spark.sql.types.DataType])
-      : Map[String, java.util.HashSet[Any]] = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      keyTypes: Seq[DataType]): Map[String, java.util.HashSet[Any]] = {
     import org.apache.spark.sql.functions.input_file_name
     // snapshot hits via get (one atomic read per sidecar — containsKey
     // then get raced with a concurrent clear and could serve null); a
     // set evicted between the two calls just degrades to a miss
     val hits = sidecars.flatMap { sc =>
-      Option(keySetCache.get(sc.dir.toString)).map(sc.dir.toString -> _)
+      Option(keySetCache.get(cacheKey(sc, keyTypes))).map(sc.dir.toString -> _)
     }.toMap
     val misses = sidecars.filterNot(sc => hits.contains(sc.dir.toString))
-    if (misses.nonEmpty) {
-      val convs = keyTypes.map(
-        CatalystTypeConverters.createToCatalystConverter).toArray
-      // sidecar dir NAMES (d<nanos>-<uuid>) are globally unique — the
-      // part-file path inside keys.parquet/ maps back through them
-      val byName = misses.map(sc =>
-        sc.dir.getFileName.toString -> sc.dir.toString).toMap
-      val fresh = new scala.collection.mutable.HashMap[String, java.util.HashSet[Any]]()
-      misses.foreach(sc => fresh(sc.dir.toString) = new java.util.HashSet[Any]())
-      // under each frame's footer schema (driver-side, memoized): no
-      // inference job, and frames stored under different column names
-      // (a re-keyed history) read as separate groups — one read per
-      // distinct schema, normally one — instead of binding to one
-      // footer's names and reading the others as NULLs
-      misses.groupBy(sc => SchemaEvolution.uniformFooterSchema(spark, sc.keysPath))
-        .toSeq.flatMap { case (schema, group) =>
-          schema.fold(spark.read)(spark.read.schema)
-            .parquet(group.map(_.keysPath): _*)
-            .select(input_file_name(), col("*")).collect()
-        }.foreach { r =>
+    if (misses.isEmpty) return hits
+    val convs = keyTypes.map(
+      CatalystTypeConverters.createToCatalystConverter).toArray
+    // sidecar dir NAMES (d<nanos>-<uuid>) are globally unique — the
+    // part-file path inside keys.parquet/ maps back through them
+    val byName = misses.map(sc =>
+      sc.dir.getFileName.toString -> sc.dir.toString).toMap
+    val fresh = new scala.collection.mutable.HashMap[String, java.util.HashSet[Any]]()
+    misses.foreach(sc => fresh(sc.dir.toString) = new java.util.HashSet[Any]())
+    // under each frame's footer schema (driver-side, memoized): no
+    // inference job, and frames stored under different column names
+    // (a re-keyed history) read as separate groups — one read per
+    // distinct schema, normally one — instead of binding to one
+    // footer's names and reading the others as NULLs
+    misses.groupBy(sc => SchemaEvolution.uniformFooterSchema(spark, sc.keysPath))
+      .toSeq.flatMap { case (schema, group) =>
+        val frame = schema.fold(spark.read)(spark.read.schema)
+          .parquet(group.map(_.keysPath): _*)
+        require(frame.schema.size == keyTypes.size,
+          s"sidecar key frames ${group.map(_.keysPath).mkString(", ")} " +
+            s"hold ${frame.schema.size} column(s), the probe expects " +
+            keyTypes.size)
+        val cols = frame.schema.fields.zip(keyTypes).map {
+          case (f, t) if f.dataType == t => col(f.name)
+          case (f, t: NumericType) if f.dataType.isInstanceOf[NumericType] &&
+              Cast.canUpCast(f.dataType, t) => col(f.name).cast(t)
+          case (f, t) => throw new IllegalStateException(
+            s"sidecar key column '${f.name}' is stored as " +
+              s"${f.dataType.sql} and cannot probe ${t.sql} values " +
+              s"losslessly (${group.map(_.keysPath).mkString(", ")})")
+        }
+        frame.select(input_file_name() +: cols.toSeq: _*).collect()
+      }.foreach { r =>
         r.getString(0).split('/').collectFirst {
           case s if byName.contains(s) => byName(s)
         }.foreach { dir =>
           // stored keys are non-null by the write contract; a null
           // component (legacy/corrupt) can never match a row probe
-          val nulls = convs.indices.exists(i => r.isNullAt(i + 1))
-          if (!nulls) fresh(dir).add(
-            if (convs.length == 1) convs(0)(r.get(1))
-            else convs.indices.map(i => convs(i)(r.get(i + 1))).toList)
+          val k = probeKey(convs.length,
+            i => if (r.isNullAt(i + 1)) null else convs(i)(r.get(i + 1)))
+          if (k != null) fresh(dir).add(k)
         }
       }
-      // crude bound on ENTRY count too (folded sidecars leave stale
-      // entries behind): past it, start over rather than grow forever.
-      // This call's hit sets were snapshotted above, so the clear can
-      // never null out the map we return.
-      if (keySetCache.size > 256) keySetCache.clear()
-      fresh.foreach { case (dir, set) =>
-        if (set.size <= CacheableKeys) keySetCache.put(dir, set)
-      }
-      // serve this call from the freshly built sets (large ones too)
-      // plus the pre-captured hits — never back through the cache
-      return sidecars.map(sc => sc.dir.toString ->
-        fresh.getOrElse(sc.dir.toString, hits(sc.dir.toString))).toMap
-    }
-    hits
+    misses.foreach(sc => cachePut(cacheKey(sc, keyTypes), fresh(sc.dir.toString)))
+    // serve this call from the freshly built sets (large ones too) plus
+    // the pre-captured hits — never back through the cache, which the
+    // bound may just have cleared
+    sidecars.map(sc => sc.dir.toString ->
+      fresh.getOrElse(sc.dir.toString, hits(sc.dir.toString))).toMap
   }
 
   /** The reader-level key filter of one affected group — serialized to
@@ -576,17 +660,11 @@ private[graft] object EqDeletes {
       keyTypes: Array[org.apache.spark.sql.types.DataType],
       deleted: java.util.HashSet[Any])
     extends org.apache.spark.sql.connector.read.PartitionReaderFactory {
-    import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 
     /** The row's probe element — null when any component is NULL (keep). */
-    private def keyOf(r: InternalRow): Any =
-      if (keyIdxs.length == 1) {
-        if (r.isNullAt(keyIdxs(0))) null else r.get(keyIdxs(0), keyTypes(0))
-      } else {
-        if (keyIdxs.indices.exists(i => r.isNullAt(keyIdxs(i)))) null
-        else keyIdxs.indices.map(i => r.get(keyIdxs(i), keyTypes(i))).toList
-      }
+    private def keyOf(r: InternalRow): Any = probeKey(keyIdxs.length,
+      i => if (r.isNullAt(keyIdxs(i))) null else r.get(keyIdxs(i), keyTypes(i)))
 
     // the SCAN interface stays row-based (eq-deletes filter per row —
     // the Iceberg read tax until compact folds), but the DECODING does
@@ -643,6 +721,50 @@ private[graft] object EqDeletes {
         }
       }
     }
+  }
+}
+
+/** The DataFrame-level key probe of [[EqDeletes.logicalMorRead]]: true
+  * (keep) unless the row's key tuple is in `deleted`, the driver-built
+  * union of one file group's applicable sidecar sets under one stored
+  * key signature. A row with a NULL key component is kept, the rule the
+  * catalog reader's probe shares ([[EqDeletes.probeKey]]). Not
+  * translatable to a data-source filter, so it never reaches a scan's
+  * pushed filters, and it prints only its sidecar count and set size.
+  * Analysis fails when the key columns do not resolve to `keyTypes`,
+  * the types the set was built in: probing other types would match
+  * nothing.
+  */
+private[graft] case class EqDeleteProbe(children: Seq[Expression],
+    keyTypes: Seq[DataType], deleted: EqDeleteProbe.Keys)
+  extends Expression with CodegenFallback {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = false
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.map(_.dataType) == keyTypes) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"equality-delete probe built for ${keyTypes.map(_.sql).mkString(",")}" +
+        s" cannot probe ${children.map(_.dataType.sql).mkString(",")}")
+  override def eval(input: InternalRow): Any = {
+    val k = EqDeletes.probeKey(children.length, i => children(i).eval(input))
+    k == null || !deleted.set.contains(k)
+  }
+  override def toString: String =
+    s"eq_delete_probe(${children.mkString(", ")}; $deleted)"
+  override def sql: String = toString
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): EqDeleteProbe =
+    copy(children = newChildren)
+}
+
+private[graft] object EqDeleteProbe {
+  /** The probe set, compared by identity (a structural equals or
+    * hashCode over up to [[EqDeletes.MaxKeys]] keys would run on every
+    * plan comparison).
+    */
+  final class Keys(val set: java.util.HashSet[Any], val sidecars: Int)
+      extends Serializable {
+    override def toString: String = s"$sidecars sidecar(s), ${set.size} keys"
   }
 }
 

@@ -44,8 +44,8 @@ import graft.sources.Tables.Warehouse
   *
   * Loud refusals instead of silent wrongness: a DELETE record with a
   * NULL key (no sidecar can identify it) and a matched set past
-  * [[EqDeletes.MaxKeys]] (the read tax would stop being "broadcast
-  * small side") both abort the statement with the remedial CALL named.
+  * [[EqDeletes.MaxKeys]] (its key set would stop being driver-sized
+  * metadata) both abort the statement with the remedial CALL named.
   */
 private[graft] object MorDeltaOperation {
   /** Test seam: the last runtime-narrowed file selection a delta
@@ -171,15 +171,19 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       // the files that can contain a deleted key when the snapshot
       // carries zone-map evidence for the key column (keep-conservative
       // bloom/min-max probe, so exclusion is proof of absence): the
-      // read-side split then keeps every other file vectorized
+      // read-side split then keeps every other file vectorized. The
+      // keys come from the tasks' commit messages, not a read-back job;
+      // when a task passed the probe cap the census stays whole and the
+      // key set loads on its first read
       val spark = SparkSession.active
+      val keyTypes = keySchema.map(_.dataType)
+      val keys =
+        if (commits.exists(_.keysOverflow)) None
+        else Some(EqDeletes.MatchedKeys(keySchema,
+          commits.toIndexedSeq.flatMap(_.keys), nullKeys = 0L))
       val all = graft.plans.ZoneMap.dataFileCensus(spark, pinnedDir)
-      val census = EqDeletes.narrowedCensus(spark, pinnedDir, keyCols,
-        keySchema.map(_.dataType),
-        spark.read.schema(keySchema)
-          .parquet(EqDeletes.keysDir(sidecarDir).toString)
-          .collect().map(r => keyCols.indices.map(r.get)).toIndexedSeq,
-        nKeys, all)
+      val census = keys.fold(all)(k => EqDeletes.narrowedCensus(spark,
+        pinnedDir, keyCols, keyTypes, k.values, nKeys, all))
       // carry source: on MAIN the freshest published version below the
       // stage (the pinned snapshot unless a rival landed — the CAS then
       // fails and the stage discards); on a BRANCH the pinned branch
@@ -220,6 +224,8 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
         case None =>
           wh.publishStage(table, stage, expected, legacyMoved)
       }
+      if (nKeys > 0) keys.foreach(
+        EqDeletes.seedKeySet(sidecarDir.getFileName.toString, _))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -227,8 +233,13 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
   }
 }
 
+/** One delta task's outcome. `keys` holds its deleted key tuples (copied
+  * out of Spark's row views) up to [[graft.plans.ZoneMap.MaxProbeKeys]];
+  * `keysOverflow` says the task deleted more than that.
+  */
 private case class MorDeltaCommit(dataFile: Option[String],
-    keyFile: Option[String], deletedKeys: Long, nullKeyDeletes: Long)
+    keyFile: Option[String], deletedKeys: Long, nullKeyDeletes: Long,
+    keys: Seq[InternalRow], keysOverflow: Boolean)
   extends WriterCommitMessage
 
 /** Per-task delta writer: INSERT/REINSERT rows stream into one LAZILY
@@ -252,6 +263,8 @@ private class MorDeltaWriterFactory(stageDir: String, keysDir: String,
       private var keyWriter: org.apache.spark.sql.execution.datasources.OutputWriter = _
       private var deleted = 0L
       private var nullDeletes = 0L
+      private val keys = scala.collection.mutable.ArrayBuffer[InternalRow]()
+      private val keyTypes = keySchema.map(_.dataType)
       // the projections Spark hands over are VIEWS over the input row —
       // consumed immediately by the parquet writers, never retained
       private def ctx(kind: String) = new TaskAttemptContextImpl(
@@ -275,6 +288,9 @@ private class MorDeltaWriterFactory(stageDir: String, keysDir: String,
           keyWriter = keyFactory.newInstance(
             s"$keysDir/$keyName", keySchema, ctx("key"))
         keyWriter.write(id)
+        if (deleted < graft.plans.ZoneMap.MaxProbeKeys)
+          keys += InternalRow.fromSeq(keyTypes.indices.map(i =>
+            InternalRow.copyValue(id.get(i, keyTypes(i)))))
         deleted += 1
       }
       override def update(metadata: InternalRow, id: InternalRow,
@@ -286,7 +302,8 @@ private class MorDeltaWriterFactory(stageDir: String, keysDir: String,
         if (dataWriter != null) dataWriter.close()
         if (keyWriter != null) keyWriter.close()
         MorDeltaCommit(Option(dataWriter).map(_ => dataName),
-          Option(keyWriter).map(_ => keyName), deleted, nullDeletes)
+          Option(keyWriter).map(_ => keyName), deleted, nullDeletes,
+          keys.toSeq, deleted > keys.size)
       }
       override def abort(): Unit = {
         if (dataWriter != null) dataWriter.close()

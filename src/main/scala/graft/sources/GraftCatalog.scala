@@ -2246,15 +2246,16 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
         else {
           val all = graft.plans.ZoneMap.dataFileCensus(spark, head)
           val census = EqDeletes.narrowedCensus(spark, head, ks,
-            ks.map(schema()(_).dataType), matched.rows, matched.n, all)
+            ks.map(schema()(_).dataType), matched.values, matched.n, all)
           val staged = wh.allocateStage(tableName)
-          try {
+          val sidecar = try {
             wh.carryVersionInto(headDir, staged)
-            EqDeletes.write(staged.toString, matched.keys, census)
+            EqDeletes.write(staged.toString, matched, census)
           } catch { case t: Throwable =>
             wh.discardStage(staged); throw t
           }
           wh.publishStageToBranch(tableName, staged, branch, expectHead)
+          EqDeletes.seedKeySet(sidecar, matched)
           true
         }
       }
@@ -2344,7 +2345,7 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
       // a matched row with a NULL key (any component) cannot be
       // identified by an equality-delete sidecar (the reader filter
       // deliberately keeps null-key rows), and a matched set past
-      // MaxKeys stops being a broadcastable fold side — both route to
+      // MaxKeys stops being driver-sized metadata — both route to
       // the POSITIONAL sidecar ([[PosDeletes]]): (file, ordinal)
       // tombstones keep the commit O(changed) where the old fallback
       // paid a COW rewrite of the table
@@ -2359,7 +2360,8 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
         // scan split's read tax tracks affected bytes: one point-delete
         // on a 100 TB table devectorizes ~one file, not the table.
         val census = EqDeletes.narrowedCensus(spark, snap, keyCols,
-          keyCols.map(schema()(_).dataType), matched.rows, matched.n, all)
+          keyCols.map(schema()(_).dataType), matched.values, matched.n, all)
+        var sidecar = ""
         wh.commit(tableName, expectCurrent = Some(expected)) { staged =>
           wh.carryPreviousInto(tableName, java.nio.file.Paths.get(staged))
           // the zone-map manifest CARRIES: a pure delete changes no file
@@ -2367,8 +2369,9 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
           // valid (and keeps narrowing STACKED deletes). Only its `rows`
           // overcount now — countFast refuses sidecar-bearing snapshots
           // for precisely that reason.
-          EqDeletes.write(staged, matched.keys, census)
+          sidecar = EqDeletes.write(staged, matched, census)
         }
+        EqDeletes.seedKeySet(sidecar, matched)
         applied = true
       }
     }

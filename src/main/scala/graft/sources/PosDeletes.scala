@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * parquet — round-16 verdict item 4): `(data file, row ordinal)`
   * tombstones for the deletes an EQUALITY sidecar cannot carry — a
   * matched set past [[EqDeletes.MaxKeys]] (enumerating keys stops being
-  * "broadcast small side") and rows whose key is NULL (no equality can
+  * driver-sized metadata) and rows whose key is NULL (no equality can
   * identify them). The commit stays O(changed): every base data file
   * hard-links into the new version and one sidecar lands under
   *

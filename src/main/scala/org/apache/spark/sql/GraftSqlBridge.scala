@@ -18,6 +18,12 @@ object GraftSqlBridge {
     * as file-source reads relax an inferred or declared data schema.
     */
   def asNullable(s: types.StructType): types.StructType = s.asNullable
+
+  /** A [[Column]] over a Catalyst expression (`ExpressionUtils.column`
+    * is `private[sql]`) — how graft's own expressions enter a DataFrame.
+    */
+  def column(e: catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
 }
 
 /** Second package-local hop, same rationale:
