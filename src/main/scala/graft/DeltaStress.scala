@@ -126,13 +126,14 @@ object DeltaStress {
     }
 
     // READ-SIDE tax (round-15 verdict items 1+5): full-scan wall time
-    // with pending sidecars, vs the clean vectorized baseline. With the
-    // plan-level split ([[graft.sources.SplitEqDeleteScans]], active via
-    // Harness's extensions wiring) the tax must track AFFECTED bytes —
-    // sidecars whose censuses touch one of 16 files should cost ~1/16 of
-    // a whole-table devectorization. Then the DEBT CURVE: scan time at
-    // 1/4/16/64 STACKED sidecars (each adds a per-row HashSet probe
-    // chain on affected files), the measurement behind the
+    // with pending sidecars, vs the clean vectorized baseline. The
+    // catalog read splices [[graft.sources.EqDeletes.logicalMorRead]]
+    // ([[graft.sources.SpliceMorReads]]): clean files stay one vectorized
+    // relation and only the census files pass the key probe, so the tax
+    // must track AFFECTED bytes — sidecars whose censuses touch one of
+    // 16 files should cost ~1/16 of probing the whole table. Then the
+    // DEBT CURVE: scan time at 1/4/16/64 STACKED sidecars (each affected
+    // group probes the union of its sets), the measurement behind the
     // `write.delete.fold-every` default.
     {
       val root = Files.createTempDirectory("graft_dstress_read").toString
@@ -181,8 +182,9 @@ object DeltaStress {
       }
       // worst case: a delete whose keys SPREAD across every file (the
       // min/max census keeps all 16) — the whole table pays the
-      // key-probe path; with the vectorized decode under the row
-      // interface this should sit near the clean scan, not multiples
+      // key probe; with vectorized decode and the probe inside
+      // whole-stage codegen this should sit near the clean scan, not
+      // multiples
       val spread = (0 until 16).map(i => i * (n / 16) + 63)
       spark.sql(s"DELETE FROM $cat.t WHERE id IN (${spread.mkString(",")})")
       val allAffected = scanSec()

@@ -66,11 +66,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // tables: must be injected (pre-pushdown batch) to become real
     // PartitionFilters; see DeriveHiddenDayFilters
     ext.injectOptimizerRule(_ => graft.sources.DeriveHiddenDayFilters)
-    // pending-eq-delete scans split at the plan level: unaffected files
-    // keep the stock vectorized relation, only sidecar-census files pay
-    // the row-based key-probe tax (pre-pushdown batch — both union sides
-    // then get their own filter/column pushdown)
-    ext.injectOptimizerRule(_ => graft.sources.SplitEqDeleteScans)
+    // no merge-on-read rule here: reads of snapshots with pending
+    // sidecars splice through graft.sources.SpliceMorReads, which the
+    // catalog registers for every session that resolves a graft table,
+    // so extended and un-extended sessions plan them alike
     // whole-operator surface (§2.10(c)): the as-of join's logical node
     // plans through its dedicated streaming-merge exec
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -2,15 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Fresh-JVM proof that the pending-sidecar plan split is UNCONDITIONAL
+/** Fresh-JVM proof that the pending-sidecar read split is UNCONDITIONAL
   * on session wiring (round 17, the I15 discipline): a session built
   * WITHOUT `graft.GraftExtensions` — the runtime-registered-catalog
   * deployment a notebook user ships — must still read a sidecar-bearing
   * merge-on-read table through the Union shape: unaffected files on the
   * stock VECTORIZED parquet path (ColumnarToRow, filters pushed to the
-  * footer pruning), affected files row-probed, answers exact. Run forked
-  * (`sbt "runMain graft.RuntimeCatalogCheck"`) so the JVM has no
-  * pre-existing session; `tools/verify_e2e.py` runs it as its
+  * footer pruning), affected files under the key probe, answers exact.
+  * Run forked (`sbt "runMain graft.RuntimeCatalogCheck"`) so the JVM has
+  * no pre-existing session; `tools/verify_e2e.py` runs it as its
   * no-extensions arm.
   */
 object RuntimeCatalogCheck {
@@ -29,8 +29,8 @@ object RuntimeCatalogCheck {
     spark.conf.set("spark.sql.catalog.runck",
       classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.runck.warehouse", whRoot)
-    require(!spark.sessionState.optimizer.toString.contains("SplitEqDelete"),
-      "precondition broken: this JVM must NOT carry the extension rule")
+    require(spark.conf.getOption("spark.sql.extensions").isEmpty,
+      "precondition broken: this JVM must NOT load session extensions")
 
     val wh = graft.sources.Tables.Warehouse(whRoot, retain = 8)
     wh.overwrite((1L to 600L).map(i =>
@@ -53,9 +53,9 @@ object RuntimeCatalogCheck {
       .head.getDouble(0)
     require(got == 1000.0, s"filtered sum: $got")
 
-    // THE round-17 assertion: without extensions, the post-pushdown twin
-    // restores the Union shape — clean side vectorized with the filter
-    // pushed, affected side scoped to the census files
+    // THE round-17 assertion: without extensions, the catalog-registered
+    // splice plans the Union shape — clean side vectorized with the
+    // filter pushed, affected side under the key probe
     val plan = spark.sql("SELECT v FROM runck.t WHERE id >= 1")
       .queryExecution.executedPlan.toString
     require(plan.contains("Union"),
@@ -64,8 +64,8 @@ object RuntimeCatalogCheck {
       s"clean side must decode vectorized without extensions:\n${plan.take(900)}")
     require(plan.contains("GreaterThanOrEqual(id,1)"),
       s"filter must reach the clean parquet scan:\n${plan.take(900)}")
-    require(plan.contains("EqDeleteScan"),
-      s"affected side must keep the key-probe scan:\n${plan.take(900)}")
+    require(plan.contains("eq_delete_probe"),
+      s"affected side must keep the key probe:\n${plan.take(900)}")
 
     println("[runtime-catalog-check] PASS: un-extended session reads " +
       "pending sidecars through the vectorized Union split")

@@ -1549,7 +1549,7 @@ object Queries {
     * until a compact. The lifecycle: a positional DELETE (NULL-key
     * matches force the ordinal route), then a delta UPDATE and a delta
     * MERGE whose target scans read the LOGICAL rows through the
-    * tombstones ([[graft.sources.PosDeltaTargetScan]] spliced by the
+    * tombstones ([[graft.sources.MorPendingScan]] spliced by the
     * catalog-registered rule); the harness REQUIRES the tombstones
     * carry, the equality sidecars stack beside them, and base files
     * never rewrite. The aggregate with everything pending hash-equals

@@ -106,14 +106,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case None => Tables.io
     }
     wh = Warehouse(root, retain = retain.getOrElse(2), io = io)
-    // the pending-sidecar plan split must be UNCONDITIONAL on session
-    // wiring (the I15 discipline): a runtime-registered catalog has no
-    // GraftExtensions injection point, so its post-pushdown twin rides
-    // extraOptimizations — registered HERE, before any query against
-    // this catalog can optimize. Idempotent; no-op when the extension's
-    // pre-pushdown rule already split the relation.
+    // the pending-sidecar read must be UNCONDITIONAL on session wiring
+    // (the I15 discipline): its splice rule rides extraOptimizations —
+    // registered HERE, before any query against this catalog can
+    // optimize, so extended and un-extended sessions plan alike.
+    // Idempotent.
     scala.util.Try(SparkSession.active).foreach(
-      GraftCatalog.registerExtraRule(_, SplitEqDeleteScanRelations))
+      GraftCatalog.registerExtraRule(_, SpliceMorReads))
   }
 
   override def name(): String = catalogName
@@ -1960,95 +1959,19 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
       provider = Some("parquet"))
   }
 
-  /** Pending equality-delete sidecars of the served snapshot. Gated on
-    * the cached MOR prop: sidecars only ever exist under it (morDelete
-    * checks it first, and UNSET refuses while any are pending), so the
-    * common non-MOR path pays a map lookup, not a directory stat.
-    */
-  private[sources] def eqDeletePending: Seq[EqDeletes.Sidecar] =
-    if (!EqDeletes.morEnabled(TableProps.read(wh, tableName))) Seq.empty
-    else EqDeletes.pending(delegate.paths.head)
-
-  private def eqDeleteKeyCols: Seq[String] = {
-    val declared = EqDeletes.keyColsOf(TableProps.read(wh, tableName))
-      .getOrElse(throw new IllegalStateException(
-        s"'$tableName' has pending equality deletes but no " +
-          s"'${EqDeletes.KeyProp}'"))
-    // defense-in-depth for API-level re-keys (advice finding, round 19):
-    // the reader-level filter probes sidecar key frames by the DECLARED
-    // columns, so a sidecar WRITTEN under a different signature would
-    // silently delete by the wrong columns. The ALTER path already
-    // refuses re-keying over pending sidecars; this guard catches the
-    // raw-TableProps bypass at scan time, loudly.
-    val mismatched = eqDeletePending.flatMap(sc =>
-      sc.storedKeyCols.filter(_ != declared)
-        .map(k => s"${sc.dir.getFileName} (written under " +
-          s"'${k.mkString(",")}')"))
-    if (mismatched.nonEmpty) throw new IllegalStateException(
-      s"'$tableName' declares '${EqDeletes.KeyProp}'=" +
-        s"'${declared.mkString(",")}' but pending equality sidecar(s) " +
-        s"${mismatched.mkString("[", "; ", "]")} are bound to a " +
-        "different key — a scan probing them by the declared columns " +
-        "would delete the wrong rows. CALL compact to fold them, then " +
-        "re-key")
-    declared
-  }
-
-  /** Pending POSITIONAL delete sidecars ([[PosDeletes]]) of the served
-    * snapshot — gated on the MOR prop like [[eqDeletePending]].
-    */
-  private[sources] def posDeletePending: Seq[java.nio.file.Path] =
-    if (!EqDeletes.morEnabled(TableProps.read(wh, tableName))) Seq.empty
-    else PosDeletes.pending(delegate.paths.head)
-
-  /** The LOGICAL read of a posdelete-bearing snapshot (tombstones probed
-    * per task, equality sidecars composed) — the plan the split rules
-    * splice in place of this table's relation.
-    */
-  private[sources] def posDeleteLogical(): Option[DataFrame] =
-    if (posDeletePending.isEmpty) None
-    else Some(EqDeletes.logicalMorRead(SparkSession.active,
-      delegate.paths.head, TableProps.read(wh, tableName),
-      schema = Some(delegate.schema)))
-
-  /** The [[SplitEqDeleteScans]] seam: when sidecars pend AND the census
-    * splits into both unaffected and affected files, return
-    * (unaffectedFiles, affectedFiles, sidecars, keyCols, snapshotDir) so
-    * the rule can plan the unaffected side as a stock columnar relation.
-    * None = nothing to split (no sidecars, or every file on one side) —
-    * the single-scan shape stands.
-    */
-  private[sources] def eqDeleteSplit(): Option[(Seq[String], Seq[String],
-      Seq[EqDeletes.Sidecar], Seq[String], String)] = {
-    val sidecars = eqDeletePending
-    if (sidecars.isEmpty) return None
-    val baseDir = delegate.paths.head
-    val all = graft.plans.ZoneMap.dataFileCensus(
-      org.apache.spark.sql.SparkSession.active, baseDir)
-    val (unaffected, affected) = EqDeletes.affectedSplit(all, sidecars)
-    if (unaffected.isEmpty || affected.isEmpty) None
-    else Some((unaffected, affected, sidecars, eqDeleteKeyCols, baseDir))
-  }
-
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // PENDING positional deletes read through the LOGICAL rewrite (the
-    // split rules splice [[posDeleteLogical]] in place of this
-    // relation); the marker scan below exists so a session that somehow
-    // carries NEITHER rule fails loudly instead of resurrecting
-    // tombstoned rows through a raw scan
-    if (posDeletePending.nonEmpty)
-      return new ScanBuilder {
-        override def build(): Scan =
-          new PosDeletePendingScan(GraftTable.this)
-      }
-    // PENDING equality deletes (merge-on-read DELETE sidecars) fold at
-    // read time — unconditional on session wiring, same discipline as
-    // hidden-day pruning (time-partitioned tables never carry sidecars,
-    // so the two faces are disjoint).
-    val sidecars = eqDeletePending
-    if (sidecars.nonEmpty)
-      return new EqDeleteScanBuilder(tableName, delegate.paths.head,
-        schema(), eqDeleteKeyCols, options, sidecars)
+    // PENDING merge-on-read sidecars of either kind read through the
+    // logical rewrite ([[SpliceMorReads]] splices the marker's
+    // [[EqDeletes.logicalMorRead]] plan in place of this relation).
+    // Gated on the cached MOR prop: sidecars only ever exist under it
+    // (morDelete checks it first, and UNSET refuses while any are
+    // pending), so the common non-MOR path pays a map lookup, not a
+    // directory stat. Time-partitioned tables never carry sidecars, so
+    // this face and hidden-day pruning are disjoint.
+    val props = TableProps.read(wh, tableName)
+    if (EqDeletes.morEnabled(props) && EqDeletes.anyPending(delegate.paths.head))
+      return new MorPendingScanBuilder(tableName, delegate.paths.head,
+        schema(), props)
     hiddenTimeColumn match {
       // derive the implied p_day conjuncts at PUSHDOWN time — pruning is
       // unconditional on session wiring (round-12 verdict item 3); only
@@ -2526,12 +2449,12 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
       val pinned = branchCtx.map(_._3).getOrElse(delegate.paths.head)
       // POSITIONAL tombstones pending (round 18 — deltas STACK over
       // them, same census rule as equality): the operation's scan routes
-      // through [[EqDeletes.logicalMorRead]] (the [[PosDeltaTargetScan]]
-      // marker spliced by the catalog-registered rule), so tombstoned
-      // rows never re-match as live; the new equality sidecar stays
-      // census-scoped to the pinned snapshot and ordinals stay valid
-      // because carried files keep their names. The pre-round-18 refusal
-      // froze the write surface after one oversized DELETE until a fold.
+      // through [[EqDeletes.logicalMorRead]] (the [[MorPendingScan]]
+      // marker below), so deleted rows never re-match as live; the new
+      // equality sidecar stays census-scoped to the pinned snapshot and
+      // ordinals stay valid because carried files keep their names. The
+      // pre-round-18 refusal froze the write surface after one oversized
+      // DELETE until a fold.
       val posPending = PosDeletes.pending(pinned).nonEmpty
       // expert-path defense (TableProps.write bypasses the DDL guard):
       // a NULL key under the required-key schema corrupts silently, so
@@ -2563,17 +2486,11 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
           wh, tableName, GraftTable.this.schema(), keyCols, info.command,
           pinned,
           opts => {
-            val sidecars = EqDeletes.pending(pinned)
-            if (posPending)
-              // both sidecar kinds read through the logical splice
-              // (equality composes beneath the ordinal probe)
-              new ScanBuilder {
-                override def build(): Scan = new PosDeltaTargetScan(
-                  tableName, pinned, GraftTable.this.schema(), morProps)
-              }
-            else if (sidecars.nonEmpty)
-              new EqDeleteScanBuilder(tableName, pinned,
-                GraftTable.this.schema(), keyCols, opts, sidecars)
+            // pending sidecars of either kind: the operation matches the
+            // LOGICAL rows through the same splice as a plain read
+            if (EqDeletes.anyPending(pinned))
+              new MorPendingScanBuilder(tableName, pinned,
+                GraftTable.this.schema(), morProps)
             else if (isMerge)
               new ScanBuilder {
                 override def build(): Scan = new GroupCowScan(tableName,

@@ -24,6 +24,19 @@ object GraftSqlBridge {
     */
   def column(e: catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression of a [[Column]], converted the way
+    * `Dataset.filter` converts it (UDFs included).
+    */
+  def expression(spark: SparkSession, c: Column): catalyst.expressions.Expression =
+    spark.asInstanceOf[classic.SparkSession].expression(c)
+
+  /** True when a data-source scan could take `e` as a pushed filter
+    * (`DataSourceStrategy.translateFilter` is `protected[sql]`).
+    */
+  def translatableFilter(e: catalyst.expressions.Expression): Boolean =
+    execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true).isDefined
 }
 
 /** Second package-local hop, same rationale:
