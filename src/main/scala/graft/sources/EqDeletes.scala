@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SaveMode, SparkSession}
@@ -386,10 +387,10 @@ private[graft] object EqDeletes {
     val readSchema = schema.getOrElse(
       SchemaEvolution.readTableWidened(spark, snapshotDir).schema)
     val tombstoned = PosDeletes.affectedFiles(pos)
-    val applicable = files.getOrElse(graft.plans.ZoneMap.dataFileCensus(spark, snapshotDir))
-      .map(f => f -> eq.filter(_.census.contains(f))).toMap
-    val (clean, affected) = applicable.keys.toSeq.sorted
-      .partition(f => applicable(f).isEmpty && !tombstoned(f))
+    val (clean, affected) = affectedSplit(
+      files.getOrElse(graft.plans.ZoneMap.dataFileCensus(spark, snapshotDir)).sorted,
+      eq, tombstoned)
+    val applicable = affected.map(f => f -> eq.filter(_.census.contains(f))).toMap
     // every applicable sidecar's key set, loaded with ONE internalKeySets
     // call per stored signature
     val used = affected.flatMap(applicable).distinct
@@ -402,9 +403,12 @@ private[graft] object EqDeletes {
     val bySignature = used.groupBy(sc => signature(sc.dir.toString))
     val keySets = bySignature
       .flatMap { case (kc, scs) => internalKeySets(spark, scs, typesOf(kc)) }
+    // fully qualified, as the file index lists them (a relative
+    // warehouse root resolves against the working directory)
+    val hfs = new HadoopPath(snapshotDir).getFileSystem(spark.sessionState.newHadoopConf())
+    def qualified(f: String): HadoopPath = hfs.makeQualified(new HadoopPath(s"$snapshotDir/$f"))
     def relation(fs: Seq[String]): (LogicalRelation, InMemoryFileIndex) = {
-      val index = new InMemoryFileIndex(spark,
-        fs.map(f => new org.apache.hadoop.fs.Path(s"$snapshotDir/$f")), Map.empty,
+      val index = new InMemoryFileIndex(spark, fs.map(qualified), Map.empty,
         Some(readSchema), userSpecifiedPartitionSpec = Some(PartitionSpec.emptySpec))
       (LogicalRelation(HadoopFsRelation(index, new StructType(),
         GraftSqlBridge.asNullable(readSchema), None, new ParquetFileFormat, Map.empty)(spark)),
@@ -417,13 +421,14 @@ private[graft] object EqDeletes {
     val plans = Seq(clean).filter(_.nonEmpty).map(relation(_)._1) ++
       Seq(affected).filter(_.nonEmpty).map { fs =>
         val (rel, index) = relation(fs)
-        // each file's path as the reader lists it: what the row's
-        // `_metadata.file_path` carries
-        val relName = fs.map(f => new org.apache.hadoop.fs.Path(s"$snapshotDir/$f").toUri.getPath -> f).toMap
+        // each listed file's `_metadata.file_path`: the URI string of
+        // the listed path, as Spark's FileFormat.FILE_PATH extractor
+        // renders it (so a space or '%' is percent-encoded)
+        val relName = fs.map(f => qualified(f) -> f).toMap
         val pathOf = index.allFiles().map { st =>
-          relName.getOrElse(st.getPath.toUri.getPath, throw new IllegalStateException(
+          relName.getOrElse(st.getPath, throw new IllegalStateException(
             s"$snapshotDir: listed data file ${st.getPath} is not in the read's file set")) ->
-            UTF8String.fromString(st.getPath.toString)
+            UTF8String.fromString(new HadoopPath(st.getPath.toString).toUri.toString)
         }.toMap
         val live: LogicalPlan =
           if (fs.exists(tombstoned)) Filter(GraftSqlBridge.expression(spark, PosDeletes.live(pos)), rel)
@@ -488,13 +493,15 @@ private[graft] object EqDeletes {
     d.getFileName.toString
   }
 
-  /** (unaffected, affected): the data files no sidecar's census names,
-    * and the rest — the line between the stock columnar scan and the
-    * key-probing one, and between the fold's carried and rewritten files.
+  /** (clean, affected): the data files no sidecar's census names and no
+    * positional tombstone touches, and the rest — the line between the
+    * stock vectorized relation and the probing one in
+    * [[logicalMorRead]], and between the fold's carried and rewritten
+    * files.
     */
-  def affectedSplit(allFiles: Seq[String], sidecars: Seq[Sidecar])
-      : (Seq[String], Seq[String]) =
-    allFiles.partition(f => !sidecars.exists(_.census.contains(f)))
+  def affectedSplit(allFiles: Seq[String], sidecars: Seq[Sidecar],
+      tombstoned: Set[String]): (Seq[String], Seq[String]) =
+    allFiles.partition(f => !tombstoned(f) && !sidecars.exists(_.census.contains(f)))
 
   /** Fold every pending sidecar into one committed rewrite: affected
     * files rewrite minus their deleted keys, unaffected files carry by
@@ -522,9 +529,8 @@ private[graft] object EqDeletes {
         val all = graft.plans.ZoneMap.dataFileCensus(spark, snap)
         // a file folds when ANY sidecar kind touches it: named in an
         // equality census, or carrying positional tombstones
-        val untouched = affectedSplit(all, sidecars)._1
-          .filterNot(PosDeletes.affectedFiles(posDirs))
-        val affected = all.filterNot(untouched.toSet)
+        val (untouched, affected) =
+          affectedSplit(all, sidecars, PosDeletes.affectedFiles(posDirs))
         // lazy: the staged write streams survivors straight from the
         // PINNED snapshot's immutable files (merge-on-read tables are
         // always versioned) — no localCheckpoint materialization pass.
@@ -694,11 +700,11 @@ private[graft] object EqDeletes {
   * pushed filters, and it prints only its sidecar count and set size.
   * Analysis fails when the children do not resolve to `keyTypes`, the
   * types the set was built in: probing other types would match nothing.
-  * Generated code and `eval` both call [[EqDeleteProbe.Keys.keeps]], so
+  * Generated code and `eval` both call [[EqDeleteProbe.Deleted.keeps]], so
   * the probe stays inside its stage's whole-stage codegen.
   */
 private[graft] case class EqDeleteProbe(children: Seq[Expression],
-    keyTypes: Seq[DataType], deleted: EqDeleteProbe.Keys)
+    keyTypes: Seq[DataType], deleted: EqDeleteProbe.Deleted)
   extends Expression {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
@@ -711,7 +717,7 @@ private[graft] case class EqDeleteProbe(children: Seq[Expression],
     deleted.keeps(children.map(_.eval(input).asInstanceOf[AnyRef]).toArray)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val keys = ctx.addReferenceObj("eqDeleteKeys", deleted,
-      classOf[EqDeleteProbe.Keys].getName)
+      classOf[EqDeleteProbe.Deleted].getName)
     val components = ctx.freshName("keyComponents")
     val fill = children.zipWithIndex.map { case (c, i) =>
       val e = c.genCode(ctx)
@@ -733,17 +739,20 @@ private[graft] case class EqDeleteProbe(children: Seq[Expression],
 }
 
 private[graft] object EqDeleteProbe {
-  /** The probe set, compared by identity (a structural equals or
-    * hashCode over up to [[EqDeletes.MaxKeys]] keys would run on every
-    * plan comparison).
+  /** What a probe asks of its deleted keys: keep the row whose key
+    * components are these (NULL for a NULL component, in declared
+    * order)? Compared by identity: a structural equals or hashCode over
+    * up to [[EqDeletes.MaxKeys]] keys would run on every plan comparison.
     */
-  class Keys(val set: java.util.HashSet[Any], val sidecars: Int)
-      extends Serializable {
-    /** Keep a row whose key components (NULL for a NULL component, in
-      * declared order) are these: not deleted, or not identifiable.
-      */
-    def keeps(components: Array[AnyRef]): Boolean = keepsKey(components, components.length)
-    private[EqDeleteProbe] def keepsKey(components: Array[AnyRef], n: Int): Boolean = {
+  sealed trait Deleted extends Serializable {
+    def keeps(components: Array[AnyRef]): Boolean
+  }
+
+  /** One probe set: the union of `sidecars` sets. */
+  final class Keys(val set: java.util.HashSet[Any], val sidecars: Int) extends Deleted {
+    def keeps(components: Array[AnyRef]): Boolean = keepsFirst(components, components.length)
+    /** [[keeps]] over the first `n` components. */
+    def keepsFirst(components: Array[AnyRef], n: Int): Boolean = {
       val k = EqDeletes.probeKey(n, components(_))
       k == null || !set.contains(k)
     }
@@ -754,16 +763,26 @@ private[graft] object EqDeleteProbe {
     * row's `_metadata.file_path`, which picks the set of the sidecars
     * whose censuses name that file (empty for a file none names). A row
     * of a file with no entry fails loudly: keeping it could resurrect a
-    * deleted row.
+    * deleted row. The path is constant within a file, so the map lookup
+    * (a hash of the whole path) runs when the file changes, not per row.
     */
   final class FileKeys(byFile: java.util.HashMap[UTF8String, Keys], sidecars: Int)
-      extends Keys(null, sidecars) {
-    override def keeps(components: Array[AnyRef]): Boolean = {
-      val file = components(components.length - 1)
-      val keys = byFile.get(file)
-      if (keys == null) throw new IllegalStateException(
-        s"equality-delete probe has no key set for data file $file")
-      keys.keepsKey(components, components.length - 1)
+      extends Deleted {
+    // (file path, its set) of the last lookup; the path is copied, as
+    // the row's value may point into a reused buffer
+    @transient private[this] var last: (UTF8String, Keys) = _
+    def keeps(components: Array[AnyRef]): Boolean = {
+      val n = components.length - 1
+      val file = components(n).asInstanceOf[UTF8String]
+      var hit = last
+      if (hit == null || hit._1 != file) {
+        val keys = byFile.get(file)
+        if (keys == null) throw new IllegalStateException(
+          s"equality-delete probe has no key set for data file $file")
+        hit = (file.clone(), keys)
+        last = hit
+      }
+      hit._2.keepsFirst(components, n)
     }
     override def toString: String = s"$sidecars sidecar(s) over ${byFile.size} file(s)"
   }

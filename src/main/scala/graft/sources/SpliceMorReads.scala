@@ -21,15 +21,15 @@ import org.apache.spark.sql.types.StructType
   *
   *   Project(original attr ids,
   *     Union(clean files: a stock vectorized parquet relation,
-  *           each affected group: its parquet relation under the group's
-  *           eq_delete_probe / tombstone filters))
+  *           affected files: one parquet relation under the tombstone
+  *           filter and one eq_delete_probe per stored key signature))
   *
   * the same plan DML matching and the fold read. The marker's builder
   * records the pushed filters (all stay residual above the relation)
   * and the pruned columns; the spliced plan applies the translatable
-  * filters again, so the nested optimization pushes them into every
-  * group's parquet scan (footer pruning, vectorized decode), and selects
-  * the pruned columns.
+  * filters again, so the nested optimization pushes them into both
+  * parquet scans (footer pruning, vectorized decode), and selects the
+  * pruned columns.
   *
   * Runs post-pushdown from `spark.experimental.extraOptimizations`,
   * registered by [[GraftCatalog.initialize]] — every session that can

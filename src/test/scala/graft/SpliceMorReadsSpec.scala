@@ -9,14 +9,15 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.{EqDeletes, GraftCatalog}
+import graft.sources.{EqDeletes, GraftCatalog, Tables}
 import graft.sources.Tables.{TableProps, Warehouse}
 
 /** The catalog reads a snapshot with pending sidecars through the same
   * [[EqDeletes.logicalMorRead]] plan as DML matching: the read loads
   * every cache-missing key set in one job however many file groups the
-  * sidecars split the table into, and the key probe compiles into its
-  * stage's whole-stage codegen.
+  * sidecars split the table into, the key probe compiles into its
+  * stage's whole-stage codegen, and the probe finds each data file's
+  * key set whatever form the warehouse root takes.
   */
 class SpliceMorReadsSpec extends SparkTestBase {
 
@@ -122,5 +123,42 @@ class SpliceMorReadsSpec extends SparkTestBase {
       try assert(values() == expect, confs.toString)
       finally confs.keys.foreach(spark.conf.unset)
     }
+  }
+
+  test("a table with pending equality and positional sidecars reads, updates and folds the same under a relative warehouse root and under a root whose path holds a space and a '%'") {
+    val relative = java.nio.file.Paths.get("target", s"splice-relative-${System.nanoTime()}")
+    val spaced = tmpDir("splice sp%ace")
+    try Seq("splicerelative" -> relative.toString, "splicespaced" -> spaced).foreach {
+      case (cat, root) =>
+        spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+        spark.conf.set(s"spark.sql.catalog.$cat.warehouse", root)
+        val wh = Warehouse(root)
+        spark.sql(s"CREATE TABLE $cat.t (id BIGINT, grp INT)")
+        spark.sql(s"INSERT INTO $cat.t SELECT id, CAST(id % 4 AS INT) FROM range(40) " +
+          "UNION ALL SELECT NULL, 7")
+        TableProps.write(wh, "t", TableProps.read(wh, "t") ++ Map(
+          EqDeletes.ModeProp -> "merge-on-read", EqDeletes.KeyProp -> "id"))
+        // a NULL key matches no equality probe: the positional sidecar
+        spark.sql(s"DELETE FROM $cat.t WHERE grp = 7")
+        spark.sql(s"DELETE FROM $cat.t WHERE grp = 1")
+        spark.sql(s"DELETE FROM $cat.t WHERE id < 4")
+        val snap = wh.snapshotPath("t")
+        assert(EqDeletes.pending(snap).size == 2, root)
+        assert(graft.sources.PosDeletes.pending(snap).size == 1, root)
+        val live = (4L until 40L).filter(_ % 4 != 1)
+        def rows(): Set[(Long, Int)] = spark.sql(s"SELECT id, grp FROM $cat.t")
+          .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+        EqDeletes.clearKeySetCache()
+        assert(rows() == live.map(i => (i, (i % 4).toInt)).toSet, root)
+        assert(EqDeletes.logicalMorRead(spark, snap, TableProps.read(wh, "t"))
+          .select("id").collect().map(_.getLong(0)).toSet == live.toSet, root)
+        // the delta target scan reads through the same sidecars
+        spark.sql(s"UPDATE $cat.t SET grp = 9 WHERE id IN (5, 6, 8)")
+        val updated = live.map(i => (i, if (i == 6L || i == 8L) 9 else (i % 4).toInt)).toSet
+        assert(rows() == updated, root)
+        spark.sql(s"CALL $cat.system.compact('t')")
+        assert(!EqDeletes.anyPending(wh.snapshotPath("t")), root)
+        assert(rows() == updated, root)
+    } finally Tables.deleteRecursively(relative)
   }
 }
