@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
@@ -22,43 +20,38 @@ import graft.sources.Tables.Warehouse
   * write, whose physical plan IS the engine's commit protocol —
   *
   *   1. at write start the driver allocates an exclusive stage dir
-  *      ([[Warehouse.allocateStage]], the same sibling-marker token every
-  *      committer uses);
+  *      through the operation's commit target ([[Warehouse.Ref]]:
+  *      main's pointer, or the write-audit-publish branch);
   *   2. executor tasks stream their partitions STRAIGHT into final files
   *      in the stage through Spark's own parquet `OutputWriterFactory`
   *      (vectorized row writer, the session's compression/rebase/
   *      timestamp settings via `ParquetUtils.prepareWrite`). There is no
   *      `_temporary` dance and no Hadoop output committer: the stage dir
-  *      is invisible to every reader until the pointer swap, so the
-  *      commit protocol already provides what a committer re-implements;
+  *      is invisible to every reader until the publish, so the commit
+  *      protocol already provides what a committer re-implements;
   *   3. `commit` prunes files of uncommitted task attempts (speculative
   *      or retried attempts write under their own names; only files
-  *      named in committed messages survive) and publishes with the
-  *      pointer CAS ([[Warehouse.publishStage]]) against the version
-  *      observed when the operation was PLANNED — a rival landing
-  *      mid-operation surfaces as a conflict, never a lost update;
+  *      named in committed messages survive), hard-links the files the
+  *      scan excluded (`carryFiles`, relative to the ref's snapshot) and
+  *      publishes with the ref's CAS, bound when the operation was
+  *      PLANNED — a rival landing mid-operation surfaces as a conflict,
+  *      never a lost update;
   *   4. `abort` discards the stage (rename-first, same as every
   *      abandoned commit).
   *
-  * The operation's scan reads the snapshot that was current at plan
-  * time (version dirs are immutable), so the rewrite is consistent even
-  * though it reads the table it replaces.
+  * The operation's scan reads the ref's snapshot (version dirs are
+  * immutable), so the rewrite is consistent even though it reads the
+  * table it replaces.
   */
-private[sources] class GraftCowBatchWrite(wh: Warehouse, table: String,
-    schema: StructType, expectCurrent: Option[Long],
-    baseDir: Option[String] = None,
-    carryFiles: () => Seq[String] = () => Nil,
-    branch: Option[(String, Long)] = None) extends Write {
-  self =>
+private[sources] class GraftCowBatchWrite(ref: Warehouse#Ref,
+    schema: StructType, carryFiles: () => Seq[String]) extends Write {
 
   override def toBatch: BatchWrite = new BatchWrite {
     private var stage: java.nio.file.Path = _
-    private var legacyMoved = false
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
       val spark = SparkSession.active
-      legacyMoved = wh.migrateLegacy(table)
-      stage = wh.allocateStage(table)
+      stage = ref.stage()
       // Spark's own parquet write preparation: sets the row schema,
       // write support class, compression codec and rebase/timestamp
       // modes on the job conf — the exact configuration the stock
@@ -91,47 +84,23 @@ private[sources] class GraftCowBatchWrite(wh: Warehouse, table: String,
       // No manifest carry: rewritten files invalidate their manifest
       // rows, so the next maintenance tick re-clusters (the appended-
       // files-only incremental contract does not cover replacements).
-      baseDir.foreach { base =>
-        carryFiles().foreach { rel =>
-          wh.io.linkOrCopy(java.nio.file.Paths.get(base, rel),
-            stage.resolve(rel))
-        }
-        // root markers carry UNCONDITIONALLY (not just excluded files):
-        // they hold cross-commit contracts — a streaming epoch marker
-        // dropped by a MERGE landing inside the epoch's replay window
-        // lets the replayed epoch double-append (advice finding)
-        Tables.writeRootMarkers(Tables.readRootMarkers(base), stage.toString)
+      carryFiles().foreach { rel =>
+        ref.warehouse.io.linkOrCopy(java.nio.file.Paths.get(ref.dir, rel),
+          stage.resolve(rel))
       }
-      // a version dir with ZERO parquet files is unreadable (no footer to
-      // infer from); a rewrite whose plan collapsed to zero tasks (or
-      // deleted every row with nothing carried) must still publish a
-      // schema-bearing snapshot — one empty part file, same as CREATE
-      val hasFiles = {
-        val s2 = java.nio.file.Files.list(stage)
-        try s2.iterator().asScala.exists(
-          _.getFileName.toString.endsWith(".parquet"))
-        finally s2.close()
-      }
-      if (!hasFiles) {
-        val spark = SparkSession.active
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-          .repartition(1).write
-          .mode(org.apache.spark.sql.SaveMode.Append).parquet(stage.toString)
-      }
-      branch match {
-        // write-audit-publish routing: the rewrite commits as the
-        // branch's new head (CAS on the recorded head prop) — main's
-        // pointer never moves until CALL fast_forward
-        case Some((b, expectHead)) =>
-          wh.publishStageToBranch(table, stage, b, expectHead)
-        case None =>
-          wh.publishStage(table, stage, expectCurrent, legacyMoved)
-      }
+      // root markers carry UNCONDITIONALLY (not just excluded files):
+      // they hold cross-commit contracts — a streaming epoch marker
+      // dropped by a MERGE landing inside the epoch's replay window
+      // lets the replayed epoch double-append (advice finding)
+      Tables.writeRootMarkers(Tables.readRootMarkers(ref.dir), stage.toString)
+      // a rewrite whose plan collapsed to zero tasks (or deleted every
+      // row with nothing carried) still publishes a schema-bearing snapshot
+      Tables.ensureFooter(SparkSession.active, stage, schema)
+      ref.publish(stage)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      if (stage != null) wh.discardStage(stage)
+      if (stage != null) ref.discard(stage)
   }
 }
 

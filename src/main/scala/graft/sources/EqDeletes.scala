@@ -132,7 +132,7 @@ private[graft] object EqDeletes {
   /** The LOGICAL-content variant of [[requireNullFreeKeys]] for
     * snapshots with pending POSITIONAL tombstones (round 18): footer
     * null counts include rows the tombstones already hide — the normal
-    * repair for NULL keys IS a positional `DELETE WHERE key IS NULL`,
+    * repair for NULL keys IS a positional DELETE by a non-key predicate,
     * after which the physical files still hold the nulls but the
     * logical content is null-free. One probe-filtered scan, memoized
     * per immutable (snapshot, keys) like the footer check.
@@ -147,8 +147,10 @@ private[graft] object EqDeletes {
     if (nulls > 0) throw new UnsupportedOperationException(
       s"$context: $nulls LIVE row(s) carry a NULL key component " +
         s"('${keyCols.mkString("','")}') — merge-on-read declares the " +
-        "key REQUIRED. Delete or repair the NULL-key rows first " +
-        "(a predicate DELETE routes them to a positional sidecar)")
+        "key REQUIRED, so a predicate on the key (`key IS NULL`) folds " +
+        "to false and matches nothing. Delete the NULL-key rows with a " +
+        "predicate on non-key columns (it routes them to a positional " +
+        "sidecar), or repair them")
     nullFreeVerified.add(memoKey)
   }
 
@@ -183,7 +185,10 @@ private[graft] object EqDeletes {
     if (nulls > 0) throw new UnsupportedOperationException(
       s"$context: $nulls row(s) carry a NULL '$keyCol' — merge-on-read " +
         "declares the key REQUIRED (equality deletes and delta writes " +
-        "identify rows by it). Repair or delete the NULL-key rows first")
+        s"identify rows by it), so `$keyCol IS NULL` folds to false and " +
+        "matches nothing. Delete the NULL-key rows with a predicate on " +
+        "non-key columns (it routes them to a positional sidecar), or " +
+        "repair them")
     nullFreeVerified.add(memoKey)
   }
 
@@ -365,16 +370,22 @@ private[graft] object EqDeletes {
     *
     * `files` restricts the read to those data files (the fold's affected
     * region); `schema` replaces the widened footer schema (a catalog
-    * splice must match its relation's output). With nothing pending and
-    * neither given, this is [[SchemaEvolution.readTableWidened]].
+    * splice must match its relation's output). `where` is the caller's
+    * predicate, applied to each relation BELOW its tombstone and key
+    * probes: Catalyst keeps the lower of two combined conditions first,
+    * so the statement's own (usually cheaper, pushed-down) predicate
+    * drops rows before the per-row hash probe sees them. With nothing
+    * pending and none of the three given, this is
+    * [[SchemaEvolution.readTableWidened]].
     */
   def logicalMorRead(spark: SparkSession, snapshotDir: String,
       props: Map[String, String], files: Option[Seq[String]] = None,
-      schema: Option[StructType] = None): DataFrame = {
+      schema: Option[StructType] = None,
+      where: Option[Column] = None): DataFrame = {
     val eq = pending(snapshotDir)
     val pos = PosDeletes.pending(snapshotDir)
     if (eq.isEmpty && pos.isEmpty && files.isEmpty && schema.isEmpty)
-      return SchemaEvolution.readTableWidened(spark, snapshotDir)
+      return where.foldLeft(SchemaEvolution.readTableWidened(spark, snapshotDir))(_.filter(_))
     // LOUD when the key declaration is gone but sidecars pend (the
     // pre-round-17 contract): a silent raw read would resurrect every
     // sidecar-deleted row through the DML matching / audit paths
@@ -407,12 +418,13 @@ private[graft] object EqDeletes {
     // warehouse root resolves against the working directory)
     val hfs = new HadoopPath(snapshotDir).getFileSystem(spark.sessionState.newHadoopConf())
     def qualified(f: String): HadoopPath = hfs.makeQualified(new HadoopPath(s"$snapshotDir/$f"))
-    def relation(fs: Seq[String]): (LogicalRelation, InMemoryFileIndex) = {
+    val whereExpr = where.map(GraftSqlBridge.expression(spark, _))
+    def relation(fs: Seq[String]): (LogicalPlan, InMemoryFileIndex) = {
       val index = new InMemoryFileIndex(spark, fs.map(qualified), Map.empty,
         Some(readSchema), userSpecifiedPartitionSpec = Some(PartitionSpec.emptySpec))
-      (LogicalRelation(HadoopFsRelation(index, new StructType(),
-        GraftSqlBridge.asNullable(readSchema), None, new ParquetFileFormat, Map.empty)(spark)),
-        index)
+      val rel = LogicalRelation(HadoopFsRelation(index, new StructType(),
+        GraftSqlBridge.asNullable(readSchema), None, new ParquetFileFormat, Map.empty)(spark))
+      (whereExpr.fold[LogicalPlan](rel)(Filter(_, rel)), index)
     }
     // at most two relations, so the plan and its codegen stages keep one
     // shape however many file groups the sidecars' censuses cut: the
@@ -546,13 +558,8 @@ private[graft] object EqDeletes {
           untouched.foreach { f =>
             wh.io.linkOrCopy(Paths.get(snap, f), Paths.get(staged, f))
           }
-          // a version dir needs at least one footer to serve its schema
-          if (survivors.isEmpty && untouched.isEmpty)
-            spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              SchemaEvolution.readTableWidened(spark, snap).schema)
-              .repartition(1).write
-              .mode(SaveMode.Append).parquet(staged)
+          Tables.ensureFooter(spark, Paths.get(staged),
+            SchemaEvolution.readTableWidened(spark, snap).schema)
           Tables.writeRootMarkers(markers, staged)
           // neither sidecar kind carries (the fold consumed them); no
           // _zonemap carry: rewritten names invalidate the census

@@ -39,8 +39,9 @@ import graft.sources.Tables.Warehouse
   *    sidecar's census = the PINNED snapshot's data files (so the new
   *    data files this very commit adds are OUTSIDE it: a re-written key
   *    is visible, exactly Iceberg's sequence-number scoping), and
-  *    publishes with the pointer CAS against the version observed at
-  *    plan time.
+  *    publishes through the operation's commit target
+  *    ([[Warehouse.Ref]], main or a write-audit-publish branch), whose
+  *    CAS expectation was bound at plan time.
   *
   * Loud refusals instead of silent wrongness: a DELETE record with a
   * NULL key (no sidecar can identify it) and a matched set past
@@ -55,17 +56,15 @@ private[graft] object MorDeltaOperation {
   @volatile private[graft] var lastScanSelection: Option[Seq[String]] = None
 }
 
-private[sources] class MorDeltaOperation(wh: Warehouse, table: String,
+private[sources] class MorDeltaOperation(ref: Warehouse#Ref,
     tableSchema: StructType, keyCols: Seq[String],
-    cmd: RowLevelOperation.Command, pinnedDir: String,
-    scanBuilderFor: CaseInsensitiveStringMap => ScanBuilder,
-    expected: Option[Long],
-    branch: Option[(String, Long)] = None)
+    cmd: RowLevelOperation.Command,
+    scanBuilderFor: CaseInsensitiveStringMap => ScanBuilder)
   extends RowLevelOperation with SupportsDelta {
 
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String =
-    s"MorDeltaOperation($table, $cmd, key=${keyCols.mkString(",")})"
+    s"MorDeltaOperation(${ref.table}, $cmd, key=${keyCols.mkString(",")})"
 
   /** The table's declared key (possibly COMPOSITE — Iceberg identifier
     * fields) IS the row identity — the same contract every keyed path
@@ -85,29 +84,28 @@ private[sources] class MorDeltaOperation(wh: Warehouse, table: String,
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite =
-        new MorDeltaWrite(wh, table, tableSchema, keyCols, pinnedDir,
-          expected, branch)
+        new MorDeltaWrite(ref, tableSchema, keyCols)
     }
 }
 
-private class MorDeltaWrite(wh: Warehouse, table: String,
-    schema: StructType, keyCols: Seq[String], pinnedDir: String,
-    expected: Option[Long],
-    branch: Option[(String, Long)] = None) extends DeltaWrite {
+/** The delta write: `ref.dir` is the snapshot the operation's scan
+  * pinned, which the census names and the commit carries from. */
+private class MorDeltaWrite(ref: Warehouse#Ref, schema: StructType,
+    keyCols: Seq[String]) extends DeltaWrite {
+  private val table = ref.table
+  private val pinnedDir = ref.dir
 
   private val keySchema = StructType(keyCols.map(c =>
     StructField(c, schema(c).dataType, nullable = false)))
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     private var stage: java.nio.file.Path = _
-    private var legacyMoved = false
     private var sidecarDir: java.nio.file.Path = _
 
     override def createBatchWriterFactory(
         info: PhysicalWriteInfo): DeltaWriterFactory = {
       val spark = SparkSession.active
-      legacyMoved = wh.migrateLegacy(table)
-      stage = wh.allocateStage(table)
+      stage = ref.stage()
       sidecarDir = EqDeletes.newSidecarDir(stage)
       java.nio.file.Files.createDirectories(EqDeletes.keysDir(sidecarDir))
       def prepared(s: StructType) = {
@@ -128,7 +126,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       val commits = messages.collect { case m: MorDeltaCommit => m }
       val nullDeletes = commits.map(_.nullKeyDeletes).sum
       if (nullDeletes > 0) {
-        wh.discardStage(stage)
+        ref.discard(stage)
         throw new UnsupportedOperationException(
           s"merge-on-read ${table} rewrite matched $nullDeletes row(s) " +
             s"with a NULL key component " +
@@ -139,7 +137,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       }
       val nKeys = commits.map(_.deletedKeys).sum
       if (nKeys > EqDeletes.MaxKeys) {
-        wh.discardStage(stage)
+        ref.discard(stage)
         throw new UnsupportedOperationException(
           s"merge-on-read ${table} rewrite matched $nKeys keys — past " +
             s"the ${EqDeletes.MaxKeys} sidecar bound a copy-on-write " +
@@ -151,7 +149,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       if (dataCommitted.isEmpty && nKeys == 0) {
         // the operation matched nothing and inserted nothing: no-op,
         // no new version (the deleteWhere no-op discipline)
-        wh.discardStage(stage)
+        ref.discard(stage)
         return
       }
       // prune uncommitted task attempts (speculative/retried)
@@ -184,16 +182,7 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
       val all = graft.plans.ZoneMap.dataFileCensus(spark, pinnedDir)
       val census = keys.fold(all)(k => EqDeletes.narrowedCensus(spark,
         pinnedDir, keyCols, keyTypes, k.values, nKeys, all))
-      // carry source: on MAIN the freshest published version below the
-      // stage (the pinned snapshot unless a rival landed — the CAS then
-      // fails and the stage discards); on a BRANCH the pinned branch
-      // HEAD (carryPreviousInto reasons over published main history,
-      // which a branch commit is not part of)
-      branch match {
-        case Some(_) => wh.carryVersionInto(
-          java.nio.file.Paths.get(pinnedDir), stage)
-        case None => wh.carryPreviousInto(table, stage)
-      }
+      ref.carryInto(stage)
       if (nKeys > 0) {
         // a carried zone-map manifest turns STALE here regardless (this
         // commit adds data files the census never saw), and its `rows`
@@ -216,20 +205,13 @@ private class MorDeltaWrite(wh: Warehouse, table: String,
         }
         if (empty) java.nio.file.Files.delete(eq)
       }
-      branch match {
-        // write-audit-publish routing: the delta commits as the
-        // branch's new head; main's pointer never moves
-        case Some((b, expectHead)) =>
-          wh.publishStageToBranch(table, stage, b, expectHead)
-        case None =>
-          wh.publishStage(table, stage, expected, legacyMoved)
-      }
+      ref.publish(stage)
       if (nKeys > 0) keys.foreach(
         EqDeletes.seedKeySet(sidecarDir.getFileName.toString, _))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      if (stage != null) wh.discardStage(stage)
+      if (stage != null) ref.discard(stage)
   }
 }
 

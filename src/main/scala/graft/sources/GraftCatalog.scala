@@ -59,11 +59,12 @@ import graft.sources.Tables.{TableProps, Warehouse}
   *   - `CREATE TABLE` / `CREATE TABLE AS SELECT` — an atomic versioned
   *     create (`PARTITIONED BY (days(ts))` declares the hidden
   *     time-partition layout, the Iceberg transform spelling);
-  *   - `INSERT INTO` — [[Tables.Warehouse.appendVersioned]], the
-  *     hard-link fast append (O(new data), old snapshot retained);
-  *   - `INSERT OVERWRITE` — [[Tables.Warehouse.overwrite]]'s pointer CAS;
-  *   - `DELETE FROM ... WHERE` — copy-on-write rewrite behind the same
-  *     CAS (the Iceberg v2 row-level delete, COW flavor);
+  *   - `INSERT INTO` — [[Tables.Warehouse.Ref.append]], the hard-link
+  *     fast append (O(new data), old snapshot retained);
+  *   - `INSERT OVERWRITE` — [[Tables.Warehouse.Ref.overwrite]];
+  *   - `DELETE FROM ... WHERE` — an equality or positional sidecar on
+  *     merge-on-read tables, a copy-on-write rewrite otherwise (the
+  *     Iceberg v2 row-level delete), behind the same CAS;
   *   - `ALTER TABLE SET/UNSET TBLPROPERTIES` — the TableProps sidecar
   *     (schema changes refuse, pointing at the declared-evolution
   *     registry); `DROP TABLE` — [[Tables.Warehouse.drop]].
@@ -274,7 +275,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     val memoHit = memoKey.flatMap(GraftCatalog.schemaMemoGet)
     val declared = memoHit.orElse {
-      if (census.fold(hasParquetFiles(path))(_.nonEmpty)) {
+      if (census.fold(Tables.hasDataFiles(path))(_.nonEmpty)) {
         if (widens.isEmpty)
           // memo miss on a flat layout: when every footer agrees, the
           // schema is computed DRIVER-SIDE (memoized footer opens, no
@@ -297,20 +298,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     pt
   }
 
-  private def hasParquetFiles(path: String): Boolean = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isDirectory(p)) return false
-    val s = java.nio.file.Files.walk(p)
-    try s.iterator().asScala.exists(f =>
-      f.getFileName.toString.endsWith(".parquet") &&
-        !f.getFileName.toString.startsWith("_") &&
-        !f.getFileName.toString.startsWith(".") &&
-        // a file under a hidden dir (_zonemap) is not table data
-        !p.relativize(f).iterator().asScala.exists(
-          c => c.toString.startsWith("_") || c.toString.startsWith(".")))
-    finally s.close()
-  }
-
   private def mkTable(t: String, path: String, policy: Either[String, Unit],
       streamPolicy: Option[Either[String, Unit]] = None): Table = {
     GraftCatalog.tableBuilds.incrementAndGet() // spec counter: one per VERSION
@@ -321,7 +308,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** Resolved-table cache, keyed by (table, CURRENT version dir): the
     * pointer path changes on every commit, so a CAS invalidates the
     * entry for free, and a cached entry's lazy file listing + schema
-    * inference (the per-query `hasParquetFiles` walk and footer reads —
+    * inference (the per-query `Tables.hasDataFiles` walk and footer reads —
     * round-12 verdict item 8) run once per VERSION instead of once per
     * query. Only POINTER layouts cache: an in-place layout (time-
     * partitioned / batch changelog, feed views) has a constant path but
@@ -890,7 +877,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def currentSchemaOf(t: String): org.apache.spark.sql.types.StructType = {
     val path = wh.snapshotPath(t)
     val widens = SchemaEvolution.declaredWidens(wh, t)
-    if (hasParquetFiles(path))
+    if (Tables.hasDataFiles(path))
       SchemaEvolution.applyWidens(
         SchemaEvolution.readTableWidened(spark, path).schema, widens)
     else TableProps.read(wh, t).get(GraftCatalog.SqlSchemaProp)
@@ -1642,7 +1629,7 @@ object GraftCatalog {
   private val SchemaMemoMaxFiles = 1024
 
   /** Sorted (relative path, size) census of the snapshot's VISIBLE data
-    * files — the same visibility rules as `hasParquetFiles`, regular
+    * files — the same visibility rules as `Tables.hasDataFiles`, regular
     * files only. None when the walk fails or the census exceeds
     * [[SchemaMemoMaxFiles]]; empty when the dir is missing. */
   private[sources] def schemaCensus(path: String): Option[Seq[(String, Long)]] = {
@@ -1836,14 +1823,19 @@ object GraftCatalog {
   * engine's COMMITTED paths, so plain SQL gets the same snapshot
   * atomicity as the API:
   *
-  *   - `INSERT INTO` → [[Tables.Warehouse.appendVersioned]] — the
+  *   - `INSERT INTO` → [[Tables.Warehouse.Ref.append]] — the
   *     hard-link fast append (O(new data); the old snapshot stays
   *     readable through VERSION AS OF; conflicts CAS-retry);
-  *   - `INSERT OVERWRITE` → [[Tables.Warehouse.overwrite]]'s pointer CAS;
-  *   - `DELETE FROM ... WHERE` → copy-on-write rewrite behind the same
-  *     CAS (survivors = rows where the predicate is FALSE or NULL, the
-  *     SQL DELETE contract), pushed as a V2 [[SupportsDelete]] so the
-  *     analyzer plans it as a metadata operation, not a rewrite query.
+  *   - `INSERT OVERWRITE` → [[Tables.Warehouse.Ref.overwrite]];
+  *   - `DELETE FROM ... WHERE` → a sidecar or survivor rewrite behind
+  *     the same CAS (survivors = rows where the predicate is FALSE or
+  *     NULL, the SQL DELETE contract), pushed as a V2
+  *     [[SupportsDelete]] so the analyzer plans it as a metadata
+  *     operation, not a rewrite query.
+  *
+  * Every write face commits through ONE [[Tables.Warehouse.Ref]]: main's
+  * pointer, or the branch `spark.graft.wap.branch` names (write-audit-
+  * publish). The face never asks which; the ref's CAS does the rest.
   *
   * The write plumbing is Spark's V1 fallback ([[V1Write]]): the exec
   * hands over the fully-resolved DataFrame and the engine's own write —
@@ -1874,7 +1866,10 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
     * "delete the NULL-key rows" works) and the delta writer refuses
     * them loudly. Known limit of the violated state: Catalyst trusts
     * the declared non-nullability, so `count(key)` / `key IS NULL`
-    * constant-fold over the violating rows until they are repaired.
+    * constant-fold over the violating rows (and a plain read may show
+    * the NULL key as a default value) until they are repaired — a
+    * `DELETE ... WHERE key IS NULL` matches nothing; delete them with a
+    * predicate on non-key columns.
     */
   override def schema(): StructType = {
     val base = delegate.schema
@@ -2005,48 +2000,16 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
         override def toInsertableRelation: InsertableRelation = {
           requireWritable("write") // batch face: time-partitioned refuses
           new InsertableRelation {
+            // one commit to the session's ref (main, or the
+            // spark.graft.wap.branch branch), retried with a generous
+            // budget: SQL INSERTs are external writers with no
+            // coordination, so N-way contention where every rival wins
+            // once each is NORMAL. OVERWRITE keeps the root markers.
             override def insert(data: DataFrame, overwrite: Boolean): Unit =
-              GraftTable.wapBranch match {
-                // write-audit-publish: the session conf routes the write
-                // onto the branch's own ref — main's pointer never moves
-                // until CALL fast_forward publishes the audited head.
-                // OVERWRITE stages the full replacement content (no
-                // carry) and CASes the branch head, the same
-                // one-commit-one-CAS shape as the append.
-                case Some(b) =>
-                  wh.retryingConflicts(maxAttempts = 10) {
-                    if (replace || overwrite) {
-                      val expectHead = wh.branches(tableName).getOrElse(b,
-                        throw new NoSuchElementException(
-                          s"'$tableName' has no branch '$b'"))._1
-                      // root markers (stream-epoch replay positions,
-                      // substrate/layout markers) must survive the
-                      // overwrite like they do on main (wh.overwrite) —
-                      // a fast-forwarded snapshot that lost its epoch
-                      // markers would re-ingest replayed epochs
-                      val markers = Tables.readRootMarkers(
-                        wh.branchSnapshotDir(tableName, b).toString)
-                      val staged = wh.allocateStage(tableName)
-                      try {
-                        data.write
-                          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                          .parquet(staged.toString)
-                        Tables.writeRootMarkers(markers, staged.toString)
-                      } catch { case t: Throwable =>
-                        wh.discardStage(staged); throw t
-                      }
-                      wh.publishStageToBranch(tableName, staged, b,
-                        expectHead)
-                    } else wh.appendToBranch(data, tableName, b)
-                  }
-                case None =>
-                  if (replace || overwrite) wh.overwrite(data, tableName)
-                  // a generous retry budget: SQL INSERTs are external
-                  // writers with no coordination, so N-way contention
-                  // where every rival wins once each is NORMAL
-                  else wh.retryingConflicts(maxAttempts = 10) {
-                    wh.appendVersioned(data, tableName)
-                  }
+              wh.retryingConflicts(maxAttempts = 10) {
+                val ref = wh.ref(tableName, GraftTable.wapBranch)
+                if (replace || overwrite) ref.overwrite(data)
+                else ref.append(data)
               }
           }
         }
@@ -2062,27 +2025,17 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
           streamPolicy.left.foreach(reason =>
             throw new UnsupportedOperationException(
               s"streaming write to '$tableName' refused: $reason"))
-          // write-audit-publish (round 17): under the WAP conf the
-          // stream's epochs commit to the BRANCH head — stage a day of
-          // ingest, audit it, fast_forward publishes every epoch with
-          // its replay markers. Captured at stream-build time (the WAP
-          // binding discipline); unknown branches refuse loudly, and a
-          // time-partitioned table refuses (its in-place layout has no
-          // branch refs — branches need the versioned pointer).
+          // the commit target is captured at stream-build time (the
+          // write-audit-publish binding discipline): an unknown branch
+          // refuses loudly, and so does a time-partitioned table under a
+          // branch (its in-place layout has no branch refs)
           val wapBranch = GraftTable.wapBranch
-          wapBranch.foreach { b =>
-            if (hiddenTimeColumn.isDefined)
-              throw new UnsupportedOperationException(
-                s"streaming write to time-partitioned '$tableName' under " +
-                  s"spark.graft.wap.branch refused: the in-place " +
-                  "partition layout has no branch refs (branches need " +
-                  "the versioned pointer layout)")
-            if (!wh.branches(tableName).contains(b))
-              throw new NoSuchElementException(
-                s"'$tableName' has no branch '$b' " +
-                  "(spark.graft.wap.branch routing): CALL " +
-                  "<catalog>.system.create_branch first")
-          }
+          if (wapBranch.isDefined && hiddenTimeColumn.isDefined)
+            throw new UnsupportedOperationException(
+              s"streaming write to time-partitioned '$tableName' under " +
+                s"spark.graft.wap.branch refused: the in-place " +
+                "partition layout has no branch refs (branches need " +
+                "the versioned pointer layout)")
           hiddenTimeColumn match {
             case Some(tc) if !replace =>
               new GraftAppendBatchStreamingWrite(wh, tableName, tc,
@@ -2092,213 +2045,95 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
                 s"'$tableName' would overwrite only the LAST epoch's " +
                 "partitions; use append mode (the layout is an append log)")
             case None =>
-              new GraftStreamingWrite(wh, tableName, info.schema(),
-                info.queryId(), replace, wapBranch)
+              new GraftStreamingWrite(wh.ref(tableName, wapBranch),
+                info.schema(), info.queryId(), replace)
           }
         }
       }
     }
   }
 
-  /** `DELETE FROM ... WHERE`: survivors rewrite as a new version behind
-    * the commit CAS — the read pins the pre-delete snapshot (versioned
-    * reads resolve the pointer at open), so the rewrite is consistent
-    * even while it reads the table it replaces. NULL predicate rows
-    * SURVIVE (SQL deletes only where the predicate is TRUE).
+  /** `DELETE FROM ... WHERE`, committed to the session's ref (main, or
+    * the `spark.graft.wap.branch` branch; one ref per conflict-retry
+    * attempt, resolved before the read). A merge-on-read table commits
+    * an equality sidecar ([[morDelete]]), or a positional one when the
+    * match holds NULL keys or is past [[EqDeletes.MaxKeys]]
+    * ([[posDelete]]); every other table, and a nested layout the
+    * positional sidecar cannot address, rewrites survivors
+    * ([[cowDelete]]). NULL predicate rows SURVIVE (SQL deletes only
+    * where the predicate is TRUE); a delete matching nothing commits
+    * nothing.
     */
   override def deleteWhere(filters: Array[Filter]): Unit = {
+    import org.apache.spark.sql.functions.lit
     requireWritable("DELETE")
-    GraftTable.wapBranch match {
-      // write-audit-publish: the delete commits as the BRANCH's new head
-      // (MOR sidecar over linked head files when declared, COW survivor
-      // rewrite otherwise) — main's pointer never moves
-      case Some(b) => branchDelete(b, filters)
-      case None =>
-        if (EqDeletes.morEnabled(TableProps.read(wh, tableName)) &&
-            morDelete(filters)) return
-        cowDelete(filters)
-    }
-  }
-
-  /** Branch-routed DELETE (the WAP DML face): reads the branch HEAD
-    * (folded when it carries sidecars), commits via the branch-head CAS.
-    * Same plan split as main: merge-on-read tables get the O(keys)
-    * equality sidecar (census narrowed through the head's zone-map
-    * evidence), NULL-key/MaxKeys matches take the POSITIONAL sidecar
-    * (round 17 — same O(changed) contract as main), nested layouts
-    * fall back to the COW survivor rewrite; a delete matching nothing
-    * commits nothing.
-    */
-  private def branchDelete(branch: String, filters: Array[Filter]): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val spark = SparkSession.active
+    val props = TableProps.read(wh, tableName)
+    val keyCols =
+      if (!EqDeletes.morEnabled(props)) None
+      else Some(EqDeletes.keyColsOf(props)
+        .getOrElse(throw new UnsupportedOperationException(
+          s"'$tableName' declares ${EqDeletes.ModeProp}=merge-on-read but " +
+            s"no ${EqDeletes.KeyProp}: equality deletes identify rows by " +
+            "the table's key")))
     val pred = filters.map(GraftTable.filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val props = TableProps.read(wh, tableName)
-    val morKeys =
-      if (EqDeletes.morEnabled(props)) EqDeletes.keyColsOf(props) else None
+    val branch = GraftTable.wapBranch
     wh.retryingConflicts(maxAttempts = 10) {
-      val expectHead = wh.branches(tableName).getOrElse(branch,
-        throw new NoSuchElementException(
-          s"'$tableName' has no branch '$branch'"))._1
-      val headDir = wh.branchSnapshotDir(tableName, branch)
-      val head = headDir.toString
-      val base = EqDeletes.logicalMorRead(spark, head, props)
-      val sidecarSettled = morKeys.exists { ks =>
-        val matched = EqDeletes.matchedKeys(base, pred, ks)
-        if (matched.nullKeys > 0 || matched.n > EqDeletes.MaxKeys) {
-          // NULL key components / oversize matched sets take the
-          // POSITIONAL sidecar on the branch exactly as on main (round
-          // 17 — the branch face kept paying a COW rewrite); a nested
-          // layout falls through to the COW arm below
-          PosDeletes.matchedPositions(spark, head, pred) match {
-            case None => false // nested layout: COW arm below
-            case Some(positions) =>
-              val staged = wh.allocateStage(tableName)
-              try {
-                wh.carryVersionInto(headDir, staged)
-                PosDeletes.write(spark, staged.toString, positions)
-              } catch { case t: Throwable =>
-                wh.discardStage(staged); throw t
-              }
-              wh.publishStageToBranch(tableName, staged, branch, expectHead)
-              true
-          }
-        }
-        else if (matched.n == 0) true // no-op: commit nothing
-        else {
-          val all = graft.plans.ZoneMap.dataFileCensus(spark, head)
-          val census = EqDeletes.narrowedCensus(spark, head, ks,
-            ks.map(schema()(_).dataType), matched.values, matched.n, all)
-          val staged = wh.allocateStage(tableName)
-          val sidecar = try {
-            wh.carryVersionInto(headDir, staged)
-            EqDeletes.write(staged.toString, matched, census)
-          } catch { case t: Throwable =>
-            wh.discardStage(staged); throw t
-          }
-          wh.publishStageToBranch(tableName, staged, branch, expectHead)
-          EqDeletes.seedKeySet(sidecar, matched)
-          true
-        }
-      }
-      if (!sidecarSettled) {
-        // FILE-GRANULAR on the branch too (the main deleteWhere shape):
-        // stats-admitted head files rewrite minus matched rows, the rest
-        // hard-link from the head; a stats-proven no-match or a
-        // matched-nothing predicate commits nothing
-        val census = graft.plans.ZoneMap.dataFileCensus(spark, head)
-        val affectedOpt =
-          if (EqDeletes.anyPending(head) ||
-              census.exists(_.contains("/"))) None
-          else GraftTable.selectCowGroups(spark, head, filters)
-            .filter(_.size < census.size)
-        if (affectedOpt.exists(_.isEmpty)) return // proven no match
-        if (affectedOpt.isEmpty &&
-            base.filter(coalesce(pred, lit(false))).limit(1).count() == 0L)
-          return
-        val markers = Tables.readRootMarkers(head)
-        val (survivors, carried) = affectedOpt match {
-          case Some(affected) =>
-            (spark.read.schema(base.schema)
-              .parquet(affected.map(f => s"$head/$f"): _*)
-              .filter(not(coalesce(pred, lit(false)))),
-              (census.toSet -- affected.toSet).toSeq)
-          case None =>
-            (base.filter(not(coalesce(pred, lit(false)))), Nil)
-        }
-        val staged = wh.allocateStage(tableName)
-        try {
-          survivors.write
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .parquet(staged.toString)
-          carried.foreach(f => wh.io.linkOrCopy(
-            java.nio.file.Paths.get(head, f),
-            staged.resolve(f)))
-          // a version dir needs at least one footer to serve its schema
-          val hasFiles = {
-            val s = java.nio.file.Files.list(staged)
-            try s.iterator().asScala.exists(
-              _.getFileName.toString.endsWith(".parquet"))
-            finally s.close()
-          }
-          if (!hasFiles)
-            spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              base.schema).repartition(1).write
-              .mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(staged.toString)
-          Tables.writeRootMarkers(markers, staged.toString)
-        } catch { case t: Throwable =>
-          wh.discardStage(staged); throw t
-        }
-        wh.publishStageToBranch(tableName, staged, branch, expectHead)
-      }
+      val ref = wh.ref(tableName, branch)
+      if (!keyCols.exists(morDelete(ref, props, _, pred)))
+        cowDelete(ref, props, filters, pred)
     }
   }
 
   /** Merge-on-read DELETE: commit an O(deleted-keys) equality-delete
     * sidecar over hard-linked base files instead of rewriting them (see
     * [[EqDeletes]]). Returns false to fall back to the COW rewrite when
-    * the matched key set is past [[EqDeletes.MaxKeys]] (a rewrite IS
-    * the better plan there) or the table has no versioned pointer.
+    * the positional route cannot address a nested layout.
     */
-  private def morDelete(filters: Array[Filter]): Boolean = {
-    import org.apache.spark.sql.functions.lit
+  private def morDelete(ref: Warehouse#Ref, props: Map[String, String],
+      keyCols: Seq[String], pred: org.apache.spark.sql.Column): Boolean = {
     val spark = SparkSession.active
-    val props = TableProps.read(wh, tableName)
-    val keyCols = EqDeletes.keyColsOf(props)
-      .getOrElse(throw new UnsupportedOperationException(
-        s"'$tableName' declares ${EqDeletes.ModeProp}=merge-on-read but " +
-          s"no ${EqDeletes.KeyProp}: equality deletes identify rows by " +
-          "the table's key"))
-    val pred = filters.map(GraftTable.filterToColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    var applied = true
-    wh.retryingConflicts(maxAttempts = 10) {
-      val expected = wh.currentVersion(tableName).getOrElse(
-        throw new UnsupportedOperationException(
-          s"merge-on-read DELETE needs '$tableName' in the versioned " +
-            "pointer layout"))
-      val snap = wh.snapshotPath(tableName)
-      // match against the LOGICAL view: earlier pending deletes (both
-      // sidecar kinds) respected
-      val matched = EqDeletes.matchedKeys(
-        EqDeletes.logicalMorRead(spark, snap, props), pred, keyCols)
-      // a matched row with a NULL key (any component) cannot be
-      // identified by an equality-delete sidecar (the reader filter
-      // deliberately keeps null-key rows), and a matched set past
-      // MaxKeys stops being driver-sized metadata — both route to
-      // the POSITIONAL sidecar ([[PosDeletes]]): (file, ordinal)
-      // tombstones keep the commit O(changed) where the old fallback
-      // paid a COW rewrite of the table
-      if (matched.nullKeys > 0 || matched.n > EqDeletes.MaxKeys)
-        applied = posDelete(spark, snap, expected, pred)
-      else if (matched.n == 0) applied = true // nothing matched: delete is a no-op
-      else {
-        val all = graft.plans.ZoneMap.dataFileCensus(spark, snap)
-        // CENSUS NARROWING (round-15 verdict item 1, round-16 footer
-        // fallback): scope the sidecar to the files that CAN contain a
-        // matched key — exclusion is proof of absence, so the plan-level
-        // scan split's read tax tracks affected bytes: one point-delete
-        // on a 100 TB table devectorizes ~one file, not the table.
-        val census = EqDeletes.narrowedCensus(spark, snap, keyCols,
-          keyCols.map(schema()(_).dataType), matched.values, matched.n, all)
-        var sidecar = ""
-        wh.commit(tableName, expectCurrent = Some(expected)) { staged =>
-          wh.carryPreviousInto(tableName, java.nio.file.Paths.get(staged))
-          // the zone-map manifest CARRIES: a pure delete changes no file
-          // names, so the per-file min/max/bloom evidence stays exactly
-          // valid (and keeps narrowing STACKED deletes). Only its `rows`
-          // overcount now — countFast refuses sidecar-bearing snapshots
-          // for precisely that reason.
-          sidecar = EqDeletes.write(staged, matched, census)
-        }
-        EqDeletes.seedKeySet(sidecar, matched)
-        applied = true
+    if (!ref.versioned) throw new UnsupportedOperationException(
+      s"merge-on-read DELETE needs '$tableName' in the versioned " +
+        "pointer layout")
+    val snap = ref.dir
+    // match against the LOGICAL view: earlier pending deletes (both
+    // sidecar kinds) respected
+    val matched = EqDeletes.matchedKeys(
+      EqDeletes.logicalMorRead(spark, snap, props, where = Some(pred)),
+      pred, keyCols)
+    // a matched row with a NULL key (any component) cannot be
+    // identified by an equality-delete sidecar (the reader filter
+    // deliberately keeps null-key rows), and a matched set past
+    // MaxKeys stops being driver-sized metadata — both route to
+    // the POSITIONAL sidecar ([[PosDeletes]]): (file, ordinal)
+    // tombstones keep the commit O(changed) where the old fallback
+    // paid a COW rewrite of the table
+    if (matched.nullKeys > 0 || matched.n > EqDeletes.MaxKeys)
+      posDelete(spark, ref, pred)
+    else if (matched.n == 0) true // nothing matched: delete is a no-op
+    else {
+      val all = graft.plans.ZoneMap.dataFileCensus(spark, snap)
+      // CENSUS NARROWING (round-15 verdict item 1, round-16 footer
+      // fallback): scope the sidecar to the files that CAN contain a
+      // matched key — exclusion is proof of absence, so the plan-level
+      // scan split's read tax tracks affected bytes: one point-delete
+      // on a 100 TB table devectorizes ~one file, not the table.
+      val census = EqDeletes.narrowedCensus(spark, snap, keyCols,
+        keyCols.map(schema()(_).dataType), matched.values, matched.n, all)
+      var sidecar = ""
+      ref.commit { staged =>
+        ref.carryInto(staged)
+        // the zone-map manifest CARRIES: a pure delete changes no file
+        // names, so the per-file min/max/bloom evidence stays exactly
+        // valid (and keeps narrowing STACKED deletes). Only its `rows`
+        // overcount now — countFast refuses sidecar-bearing snapshots
+        // for precisely that reason.
+        sidecar = EqDeletes.write(staged.toString, matched, census)
       }
+      EqDeletes.seedKeySet(sidecar, matched)
+      true
     }
-    applied
   }
 
   /** POSITIONAL-delete commit (Iceberg v2 position deletes — round 17):
@@ -2312,86 +2147,73 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
     * false (→ the COW rewrite) on a nested (bucketed) layout, whose
     * file names the flat ordinal keying cannot address.
     */
-  private def posDelete(spark: SparkSession, snap: String, expected: Long,
+  private def posDelete(spark: SparkSession, ref: Warehouse#Ref,
       pred: org.apache.spark.sql.Column): Boolean = {
-    val positions = PosDeletes.matchedPositions(spark, snap, pred)
+    val positions = PosDeletes.matchedPositions(spark, ref.dir, pred)
       .getOrElse(return false) // nested layout: COW owns it
-    wh.commit(tableName, expectCurrent = Some(expected)) { staged =>
-      wh.carryPreviousInto(tableName, java.nio.file.Paths.get(staged))
+    ref.commit { staged =>
+      ref.carryInto(staged)
       // the zone-map manifest CARRIES (no file names change; min/max/
       // bloom stay conservative) — countFast refuses sidecar-bearing
       // snapshots, same contract as the equality path
-      PosDeletes.write(spark, staged, positions)
+      PosDeletes.write(spark, staged.toString, positions)
     }
     true
   }
 
   /** Copy-on-write DELETE (the default): survivors rewrite as a new
-    * version behind the commit CAS.
+    * version behind the ref's CAS.
     */
-  private def cowDelete(filters: Array[Filter]): Unit = {
+  private def cowDelete(ref: Warehouse#Ref, props: Map[String, String],
+      filters: Array[Filter], pred: org.apache.spark.sql.Column): Unit = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val spark = SparkSession.active
-    val pred = filters.map(GraftTable.filterToColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    wh.retryingConflicts(maxAttempts = 10) {
-      // CAS expectation FIRST, read second: a rival landing between the
-      // two flips the CAS red (retry, re-read) — the reverse order would
-      // let the CAS pass while the survivors were read from the OLD
-      // snapshot, silently discarding the rival's rows (lost update)
-      val expected = wh.currentVersion(tableName)
-      val snap = wh.snapshotPath(tableName)
-      val markers = Tables.readRootMarkers(snap)
-      // FILE-GRANULAR groups (round 16): on a clustered table whose
-      // zone-map stats bound the predicate, only the files that CAN
-      // contain a match rewrite — everything else carries as a hard
-      // link, the same per-file COW the row-level UPDATE path does. A
-      // point DELETE on a 100 TB table stops costing a table rewrite.
-      // Keep-conservative: an unbounded predicate, a stale/missing
-      // manifest, pending sidecars (the folded read below owns those),
-      // or a nested (bucketed) layout all fall back to the full rewrite.
-      val sidecarsPending = EqDeletes.anyPending(snap)
-      val census =
-        if (sidecarsPending) Nil
-        else graft.plans.ZoneMap.dataFileCensus(spark, snap)
-      val affectedOpt =
-        if (sidecarsPending || census.exists(_.contains("/"))) None
-        else GraftTable.selectCowGroups(spark, snap, filters)
-          .filter(_.size < census.size)
-      affectedOpt match {
-        case Some(affected) if affected.isEmpty =>
-          // the stats PROVE no row matches: the delete is a no-op and
-          // commits nothing (no version bump — the morDelete discipline)
-          ()
-        case Some(affected) =>
-          val schema = SchemaEvolution.readTableWidened(spark, snap).schema
-          val survivors = spark.read.schema(schema)
-            .parquet(affected.map(f => s"$snap/$f"): _*)
-            .filter(not(coalesce(pred, lit(false))))
-          val carried = census.toSet -- affected.toSet
-          wh.commit(tableName, expectCurrent = expected) { staged =>
-            survivors.write
-              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staged)
-            carried.foreach(f => wh.io.linkOrCopy(
-              java.nio.file.Paths.get(snap, f),
-              java.nio.file.Paths.get(staged, f)))
-            // no manifest carry: the rewritten affected files invalidate
-            // their census rows (same contract as the row-level COW)
-            Tables.writeRootMarkers(markers, staged)
-          }
-        case None =>
-          // FOLDED base when sidecars are pending (the huge-delete
-          // fallback from morDelete): a raw read would resurrect the
-          // deleted keys
-          val survivors = EqDeletes.logicalMorRead(spark, snap,
-              TableProps.read(wh, tableName))
-            .filter(not(coalesce(pred, lit(false))))
-          wh.commit(tableName, expectCurrent = expected) { staged =>
-            survivors.write
-              .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staged)
-            Tables.writeRootMarkers(markers, staged)
-          }
-      }
+    val snap = ref.dir
+    val markers = Tables.readRootMarkers(snap)
+    // FILE-GRANULAR groups (round 16): on a clustered table whose
+    // zone-map stats bound the predicate, only the files that CAN
+    // contain a match rewrite — everything else carries as a hard
+    // link, the same per-file COW the row-level UPDATE path does. A
+    // point DELETE on a 100 TB table stops costing a table rewrite.
+    // Keep-conservative: an unbounded predicate, a stale/missing
+    // manifest, pending sidecars (the folded read below owns those),
+    // or a nested (bucketed) layout all fall back to the full rewrite.
+    val sidecarsPending = EqDeletes.anyPending(snap)
+    val census =
+      if (sidecarsPending) Nil
+      else graft.plans.ZoneMap.dataFileCensus(spark, snap)
+    val affectedOpt =
+      if (sidecarsPending || census.exists(_.contains("/"))) None
+      else GraftTable.selectCowGroups(spark, snap, filters)
+        .filter(_.size < census.size)
+    val (survivors, carried) = affectedOpt match {
+      // the stats PROVE no row matches: commit nothing
+      case Some(affected) if affected.isEmpty => return
+      case Some(affected) =>
+        val schema = SchemaEvolution.readTableWidened(spark, snap).schema
+        (spark.read.schema(schema)
+          .parquet(affected.map(f => s"$snap/$f"): _*)
+          .filter(not(coalesce(pred, lit(false)))),
+          census.toSet -- affected.toSet)
+      case None =>
+        // FOLDED base when sidecars are pending (the huge-delete
+        // fallback from morDelete): a raw read would resurrect the
+        // deleted keys
+        val base = EqDeletes.logicalMorRead(spark, snap, props)
+        // a whole-table rewrite that matches nothing commits nothing
+        if (base.filter(coalesce(pred, lit(false))).limit(1).count() == 0L)
+          return
+        (base.filter(not(coalesce(pred, lit(false)))), Set.empty[String])
+    }
+    ref.commit { staged =>
+      survivors.write
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staged.toString)
+      carried.foreach(f => wh.io.linkOrCopy(
+        java.nio.file.Paths.get(snap, f), staged.resolve(f)))
+      Tables.ensureFooter(spark, staged, survivors.schema)
+      // no manifest carry: the rewritten affected files invalidate
+      // their census rows (same contract as the row-level COW)
+      Tables.writeRootMarkers(markers, staged.toString)
     }
   }
 
@@ -2402,13 +2224,14 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
 
   /** `MERGE INTO` / `UPDATE` (and the rewrite-flavor `DELETE`): Spark's
     * group-based copy-on-write row-level operations, with the whole
-    * table as the one group — the analyzer reads the current snapshot
+    * table as the one group — the analyzer reads the ref's snapshot
     * through the operation's scan, applies the merge/update logic, and
     * [[GraftCowBatchWrite]] streams the post-operation rows into an
-    * exclusively-allocated stage published by the pointer CAS. The CAS
-    * expectation binds HERE, before the scan is built (the deleteWhere
-    * ordering discipline): a rival landing mid-operation flips the
-    * publish into a conflict, never a lost update. Whole-table-as-group
+    * exclusively-allocated stage published by the ref's CAS. The ref
+    * (main, or the `spark.graft.wap.branch` branch) binds HERE, before
+    * the scan is built (the deleteWhere ordering discipline): a rival
+    * landing mid-operation flips the publish into a conflict, never a
+    * lost update. Whole-table-as-group
     * is the honest COW granularity for this layout (a version dir is
     * one snapshot); per-file groups would need runtime group filtering
     * against the zone-map census — named as the optimization path, not
@@ -2418,19 +2241,15 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
     requireWritable(info.command.toString)
-    // write-audit-publish routing: under `spark.graft.wap.branch` the
-    // operation READS the branch head and COMMITS via the branch-head
-    // CAS — main's pointer never moves until CALL fast_forward.
-    // (branchName, expectedHead, headDir) captured at PLAN time, the
-    // same binding discipline as the main-path `expected` below.
-    val branchCtx: Option[(String, Long, String)] =
-      GraftTable.wapBranch.map { b =>
-        val head = wh.branches(tableName).getOrElse(b,
-          throw new NoSuchElementException(
-            s"'$tableName' has no branch '$b'"))._1
-        (b, head, wh.branchSnapshotDir(tableName, b).toString)
-      }
-    val branchPublish = branchCtx.map { case (b, h, _) => (b, h) }
+    val ref = wh.ref(tableName, GraftTable.wapBranch)
+    val pinned = ref.dir
+    // the loaded table's own scan when it pins the ref's snapshot (a
+    // rival may have committed since the table loaded, and a branch
+    // head is never the loaded snapshot)
+    def scanOf(opts: CaseInsensitiveStringMap): ScanBuilder =
+      if (pinned == delegate.paths.head) delegate.newScanBuilder(opts)
+      else GraftTable.parquetTableOver(tableName, pinned,
+        GraftTable.this.schema()).newScanBuilder(opts)
     // merge-on-read UPDATE / MERGE: a DELTA-BASED operation
     // ([[MorDeltaOperation]]) — O(changed rows) sidecar + fast-append
     // commit instead of the whole-group COW rewrite below. DELETE stays
@@ -2445,8 +2264,6 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
           s"'$tableName' declares ${EqDeletes.ModeProp}=merge-on-read " +
             s"but no ${EqDeletes.KeyProp}: delta writes identify rows " +
             "by the table's key"))
-      val deltaExpected = wh.currentVersion(tableName)
-      val pinned = branchCtx.map(_._3).getOrElse(delegate.paths.head)
       // POSITIONAL tombstones pending (round 18 — deltas STACK over
       // them, same census rule as equality): the operation's scan routes
       // through [[EqDeletes.logicalMorRead]] (the [[MorPendingScan]]
@@ -2483,8 +2300,7 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
         org.apache.spark.sql.connector.write.RowLevelOperation.Command.MERGE
       return new RowLevelOperationBuilder {
         override def build(): RowLevelOperation = new MorDeltaOperation(
-          wh, tableName, GraftTable.this.schema(), keyCols, info.command,
-          pinned,
+          ref, GraftTable.this.schema(), keyCols, info.command,
           opts => {
             // pending sidecars of either kind: the operation matches the
             // LOGICAL rows through the same splice as a plain read
@@ -2497,12 +2313,8 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
                   pinned, GraftTable.this.schema(), opts, None,
                   sel => MorDeltaOperation.lastScanSelection = sel)
               }
-            else if (branchCtx.isDefined)
-              GraftTable.parquetTableOver(tableName, pinned,
-                GraftTable.this.schema()).newScanBuilder(opts)
-            else delegate.newScanBuilder(opts)
-          },
-          deltaExpected, branchPublish)
+            else scanOf(opts)
+          })
       }
     }
     // the group scan reads RAW files; pending eq-delete sidecars would
@@ -2514,15 +2326,13 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
     // whose MOR/folded paths handle sidecars correctly — takes over.
     // An eager throw here would refuse the stacked merge-on-read
     // DELETE that never touches this scan.
-    val cowPinned = branchCtx.map(_._3).getOrElse(delegate.paths.head)
-    val morPending = EqDeletes.anyPending(cowPinned)
+    val morPending = EqDeletes.anyPending(pinned)
     def refusePending(): Unit = require(!morPending,
       s"'$tableName' has pending merge-on-read sidecars (equality or " +
         s"positional); CALL <catalog>.system.compact('$tableName') " +
         "to fold them before a group-based rewrite")
     if (info.command != org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
       refusePending()
-    val expected = wh.currentVersion(tableName)
     new RowLevelOperationBuilder {
       override def build(): RowLevelOperation = new RowLevelOperation {
         override def command(): RowLevelOperation.Command = info.command
@@ -2562,8 +2372,8 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
               // runtime narrowing (MERGE matched keys) arrives through
               // the scan's SupportsRuntimeV2Filtering face
               scannedRel = GraftTable.selectCowGroups(
-                SparkSession.active, cowPinned, recorded)
-              new GroupCowScan(tableName, cowPinned,
+                SparkSession.active, pinned, recorded)
+              new GroupCowScan(tableName, pinned,
                 GraftTable.this.schema(), options, scannedRel,
                 sel => scannedRel = sel)
             }
@@ -2576,15 +2386,14 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
         override def newWriteBuilder(winfo: LogicalWriteInfo): WriteBuilder =
           new WriteBuilder {
             override def build(): org.apache.spark.sql.connector.write.Write =
-              new GraftCowBatchWrite(wh, tableName, GraftTable.this.schema(),
-                expected, Some(cowPinned),
+              new GraftCowBatchWrite(ref, GraftTable.this.schema(),
                 () => scannedRel match {
                   case Some(scanned) =>
                     val all = graft.plans.ZoneMap.dataFileCensus(
-                      SparkSession.active, cowPinned)
+                      SparkSession.active, pinned)
                     (all.toSet -- scanned.toSet).toSeq.sorted
                   case None => Nil
-                }, branchPublish)
+                })
           }
       }
     }
@@ -2598,19 +2407,20 @@ private[sources] object GraftTable {
 
   /** The session's write-audit-publish branch (`spark.graft.wap.branch`,
     * the Iceberg `spark.wap.branch` pattern): when set, every write face
-    * — SQL INSERT/OVERWRITE/DELETE/UPDATE/MERGE and (round 17) streaming
-    * epochs — lands on that branch's ref; a write silently hitting MAIN
-    * while the session believes it is staging on a branch would be the
-    * worst kind of publish, so faces that cannot route refuse loudly.
+    * — SQL INSERT/OVERWRITE/DELETE/UPDATE/MERGE and streaming epochs —
+    * resolves that branch's [[Tables.Warehouse.Ref]]; a write silently
+    * hitting MAIN while the session believes it is staging on a branch
+    * would be the worst kind of publish, so an unknown branch, and a
+    * face that cannot route, refuse loudly.
     */
   private[sources] def wapBranch: Option[String] =
     Option(SparkSession.active)
       .map(_.conf.get("spark.graft.wap.branch", ""))
       .map(_.trim).filter(_.nonEmpty)
 
-  /** A stock parquet table over one snapshot dir — the branch-head scan
-    * face for row-level operations (the table's own `delegate` is pinned
-    * to MAIN's snapshot).
+  /** A stock parquet table over one snapshot dir — the scan face of a
+    * row-level operation whose ref does not pin the table's loaded
+    * snapshot (a branch head, or main moved since the load).
     */
   private[sources] def parquetTableOver(name: String, dir: String,
       schema: StructType): org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable = {

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.StructType
   * the same plan DML matching and the fold read. The marker's builder
   * records the pushed filters (all stay residual above the relation)
   * and the pruned columns; the spliced plan applies the translatable
-  * filters again, so the nested optimization pushes them into both
-  * parquet scans (footer pruning, vectorized decode), and selects the
-  * pruned columns.
+  * filters again on each relation, below its key probe (so they run
+  * before it), the nested optimization pushes them into both parquet
+  * scans (footer pruning, vectorized decode), and selects the pruned
+  * columns.
   *
   * Runs post-pushdown from `spark.experimental.extraOptimizations`,
   * registered by [[GraftCatalog.initialize]] — every session that can
@@ -99,12 +100,13 @@ private[sources] class MorPendingScanBuilder(tableName: String,
     val names = required.fieldNames.toSet
     val readSchema = StructType(tableSchema.fields.filter(f => names(f.name)))
     // only filters a parquet scan can take again: anything else (a
-    // Python UDF, say) stays with the residual Filter alone
-    val filtered = recorded.filter(GraftSqlBridge.translatableFilter)
+    // Python UDF, say) stays with the residual Filter alone. Applied
+    // under the key probes, so the statement's predicate runs first.
+    val where = recorded.filter(GraftSqlBridge.translatableFilter)
       .map(_.transform { case a: AttributeReference => UnresolvedAttribute.quoted(a.name) })
-      .reduceOption(And)
-      .foldLeft(EqDeletes.logicalMorRead(SparkSession.active, snapshotDir, props,
-        schema = Some(tableSchema)))((df, f) => df.filter(GraftSqlBridge.column(f)))
+      .reduceOption(And).map(GraftSqlBridge.column)
+    val filtered = EqDeletes.logicalMorRead(SparkSession.active, snapshotDir,
+      props, schema = Some(tableSchema), where = where)
     new MorPendingScan(tableName, snapshotDir, readSchema,
       filtered.select(readSchema.fieldNames.toSeq.map(n =>
         GraftSqlBridge.column(UnresolvedAttribute.quoted(n))): _*))

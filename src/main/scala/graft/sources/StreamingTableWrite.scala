@@ -3,8 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.spark.sql.SparkSession
@@ -33,40 +31,37 @@ import graft.sources.Tables.Warehouse
   *     named in committed messages survive — same discipline as
   *     [[GraftCowBatchWrite]]);
   *  2. `commit(epoch)` allocates an exclusive stage, hard-links the
-  *     committed epoch files in, carries the previous published version
-  *     ([[Warehouse.carryPreviousInto]] — the hard-link fast append, so
-  *     an epoch costs O(epoch data)), stamps the epoch MARKER inside
-  *     the stage, and publishes with the pointer CAS.
+  *     committed epoch files in, carries the ref's current content
+  *     ([[Warehouse.Ref.carryInto]] — the hard-link fast append, so an
+  *     epoch costs O(epoch data)), stamps the epoch MARKER inside the
+  *     stage, and publishes with the ref's CAS.
   *
   * EXACTLY-ONCE across restarts rides the marker: `_stream_epoch`
   * records `(queryId, epochId)` inside the version dir — atomic with
   * the snapshot, carried forward by every other committer (append,
   * compaction) via the root-marker carry. A replayed epoch (crash
-  * between our commit and the checkpoint commit) reads the marker,
-  * sees itself already absorbed, and is a no-op. The queryId is the
-  * stream's PERSISTENT id (stable across restarts of one checkpoint;
-  * fresh checkpoint = fresh id, so a re-built lineage restarting at
-  * epoch 0 is never wrongly skipped.)
+  * between our commit and the checkpoint commit) reads the marker in
+  * the ref's snapshot, sees itself already absorbed, and is a no-op.
+  * The queryId is the stream's PERSISTENT id (stable across restarts of
+  * one checkpoint; fresh checkpoint = fresh id, so a re-built lineage
+  * restarting at epoch 0 is never wrongly skipped.)
   *
   * Complete-mode (`truncate`) epochs overwrite instead of carrying —
-  * each epoch IS the table.
+  * each epoch IS the table — but keep the snapshot's root markers
+  * (other streams' replay positions), as every overwrite does.
   *
-  * WRITE-AUDIT-PUBLISH (round 17): under `spark.graft.wap.branch` the
-  * whole lifecycle re-targets the BRANCH ref — epochs carry from the
-  * branch HEAD and publish via the branch-head CAS
-  * ([[Warehouse.publishStageToBranch]]), the `_stream_epoch_<queryId>`
-  * marker rides the head dir (stamped into each staged epoch, carried
-  * by the branch carry), and replay idempotence reads the marker FROM
-  * THE HEAD — main's pointer never moves while a day of ingest stages
-  * for audit, and one `CALL fast_forward` publishes every staged epoch
-  * with its markers intact (exactly-once holds across the promotion:
-  * the head dir IS the published dir). The branch is captured at
-  * stream-build time — the binding discipline of every WAP face.
+  * `ref` is the commit target captured at stream-build time (main, or
+  * the `spark.graft.wap.branch` branch — the binding discipline of every
+  * write-audit-publish face); each epoch attempt commits through
+  * `ref.fresh()`. Under a branch, epochs stage on the head and one
+  * `CALL fast_forward` publishes them with their markers intact.
   */
-private[sources] class GraftStreamingWrite(wh: Warehouse, table: String,
-    schema: StructType, queryId: String, truncate: Boolean,
-    branch: Option[String] = None)
+private[sources] class GraftStreamingWrite(ref: Warehouse#Ref,
+    schema: StructType, queryId: String, truncate: Boolean)
   extends StreamingWrite {
+
+  private val wh = ref.warehouse
+  private val table = ref.table
 
   private def epochDir(epochId: Long): Path =
     Paths.get(s"${wh.tablePath(table)}.streamepoch_${queryId}_$epochId")
@@ -88,61 +83,23 @@ private[sources] class GraftStreamingWrite(wh: Warehouse, table: String,
     val committed = messages.collect { case CowFileCommit(f) => f }.toSet
     val epoch = epochDir(epochId)
     wh.retryingConflicts(maxAttempts = 10) {
-      // the epoch's carry source + replay witness: main's current
-      // snapshot, or the branch HEAD under write-audit-publish
-      val readFrom = branch match {
-        case Some(b) => wh.branchSnapshotDir(table, b).toString
-        case None => wh.snapshotPath(table)
-      }
-      if (!alreadyApplied(readFrom, epochId)) {
-        val expected = wh.currentVersion(table)
-        val expectHead = branch.map(b => wh.branches(table)(b)._1)
-        val legacyMoved =
-          if (branch.isEmpty) wh.migrateLegacy(table) else false
-        val stage = wh.allocateStage(table)
-        try {
+      val target = ref.fresh()
+      // the ref's snapshot is the epoch's carry source + replay witness
+      if (!alreadyApplied(target.dir, epochId)) {
+        val markers =
+          if (truncate) Tables.readRootMarkers(target.dir) else Nil
+        target.commit { stage =>
           committed.foreach { f =>
             wh.io.linkOrCopy(epoch.resolve(f), stage.resolve(f))
           }
-          if (!truncate) branch match {
-            case Some(_) =>
-              wh.carryVersionInto(Paths.get(readFrom), stage)
-            case None => wh.carryPreviousInto(table, stage)
-          } else if (branch.isDefined)
-            // complete mode replaces content but the head's root markers
-            // (other streams' replay positions) must survive, same as
-            // the branch INSERT OVERWRITE contract
-            Tables.writeRootMarkers(
-              Tables.readRootMarkers(readFrom), stage.toString)
-          // a snapshot with zero parquet files is unreadable (no footer):
-          // an empty first/complete epoch still publishes a schema-bearing
-          // version, same as CREATE TABLE
-          val hasFiles = {
-            val s = Files.list(stage)
-            try s.iterator().asScala.exists(
-              _.getFileName.toString.endsWith(".parquet"))
-            finally s.close()
-          }
-          if (!hasFiles) {
-            SparkSession.active.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              schema).repartition(1).write
-              .mode(org.apache.spark.sql.SaveMode.Append).parquet(stage.toString)
-          }
+          if (truncate) Tables.writeRootMarkers(markers, stage.toString)
+          else target.carryInto(stage)
+          // an empty first/complete epoch still publishes a
+          // schema-bearing version, same as CREATE TABLE
+          Tables.ensureFooter(SparkSession.active, stage, schema)
           Files.writeString(
             stage.resolve(GraftStreamingWrite.markerName(queryId)),
             epochId.toString)
-          branch match {
-            case Some(b) =>
-              wh.publishStageToBranch(table, stage, b, expectHead.get)
-            case None =>
-              wh.publishStage(table, stage, expected, legacyMoved)
-          }
-        } catch {
-          case t: Throwable =>
-            if (!t.isInstanceOf[java.util.ConcurrentModificationException])
-              wh.discardStage(stage)
-            throw t
         }
       }
     }

@@ -297,13 +297,133 @@ object Tables {
         (write: String => Unit): Long = {
       require(!name.contains("/"),
         s"commit is table-level; '$name' looks like a subdirectory")
-      Files.createDirectories(Paths.get(root))
-      verifySubstrate(stamp = true)
-      val legacyMoved = migrateLegacy(name)
-      val versionDir = allocateStage(name)
-      try write(versionDir.toString)
-      catch { case t: Throwable => discardStage(versionDir); throw t }
-      publishStage(name, versionDir, expectCurrent, legacyMoved, expectAbsent)
+      new MainRef(name, expectCurrent, expectAbsent)
+        .commit(staged => write(staged.toString))
+    }
+
+    /** The commit target of every write face: the table's MAIN pointer
+      * or one of its write-audit-publish BRANCH refs. In Iceberg main is
+      * a branch too — every snapshot producer commits to a ref, and
+      * `spark.graft.wap.branch` only picks which one — so a face holds
+      * one `Ref` and never asks which kind it is. Two cases:
+      *
+      *  - [[MainRef]]: the pointer CAS on the version current when the
+      *    ref was resolved. Its stage migrates a legacy real-dir layout
+      *    first, and the publish skips the expectation for exactly that
+      *    migrating commit.
+      *  - [[BranchRef]]: the CAS on the branch's recorded head prop. The
+      *    stage carries from the head, and the publish moves only the
+      *    head; main's pointer never moves until `fast_forward`.
+      *
+      * A ref binds its CAS expectation when [[ref]] resolves it, so a
+      * face resolves it BEFORE it reads the snapshot it rewrites (`dir`):
+      * a rival landing in between flips the publish into a retryable
+      * ConcurrentModificationException, never a lost update. Every
+      * [[stage]] ends in [[publish]] or [[discard]]; [[commit]] does both.
+      */
+    sealed abstract class Ref {
+      def warehouse: Warehouse = Warehouse.this
+      def table: String
+      /** The snapshot the write reads and carries from. */
+      def dir: String
+      /** False only for a main ref of a table without the versioned
+        * pointer (a legacy real-dir layout, or no table yet). */
+      def versioned: Boolean
+      /** Allocate an exclusive stage dir for this ref's next version. */
+      def stage(): Path
+      /** Zero-copy carry of the ref's current content into `stage`
+        * (data files, sidecars, zone-map manifest, root markers). */
+      def carryInto(stage: Path): Unit
+      /** Publish `stage` with this ref's CAS; a lost CAS discards the
+        * stage and throws ConcurrentModificationException. */
+      def publish(stage: Path): Unit
+      def discard(stage: Path): Unit = discardStage(stage)
+      /** The same target with its expectation bound anew (a retry, or
+        * the next commit of a long-lived writer). */
+      def fresh(): Ref
+
+      /** Stage, `write`, discard on a throw, publish.
+        * @return the version number this commit published */
+      final def commit(write: Path => Unit): Long = {
+        val staged = stage()
+        try write(staged)
+        catch { case t: Throwable => discard(staged); throw t }
+        publish(staged)
+        stageVersion(table, staged)
+      }
+
+      /** Atomic versioned APPEND: `df`'s rows plus the ref's carried
+        * content (see [[appendVersioned]]). */
+      final def append(df: DataFrame): Long = commit { staged =>
+        df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+        carryInto(staged)
+      }
+
+      /** Replace the ref's data with `df`. Root markers (stream replay
+        * positions, cursors) ride the overwrite: it replaces DATA, not
+        * the table's cross-commit contracts. */
+      final def overwrite(df: DataFrame): Long = {
+        val markers = Tables.readRootMarkers(dir)
+        commit { staged =>
+          df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+          Tables.writeRootMarkers(markers, staged.toString)
+        }
+      }
+    }
+
+    /** The main pointer as a commit target (see [[Ref]]). `expected` is
+      * the version the publish CASes against (None: no compare);
+      * `expectAbsent` demands the table still not exist at publish.
+      */
+    final class MainRef private[Warehouse] (val table: String,
+        expected: Option[Long], expectAbsent: Boolean = false) extends Ref {
+      // resolved on first use, AFTER the expectation: a rival landing
+      // in between can only make the CAS fail, never pass on stale data
+      lazy val dir: String = snapshotPath(table)
+      def versioned: Boolean = expected.isDefined
+      private var legacyMoved = false
+      def stage(): Path = {
+        Files.createDirectories(Paths.get(root))
+        verifySubstrate(stamp = true)
+        legacyMoved = migrateLegacy(table)
+        allocateStage(table)
+      }
+      // the freshest published version below the stage: the read
+      // snapshot unless a rival landed, and then the CAS fails
+      def carryInto(stage: Path): Unit = carryPreviousInto(table, stage)
+      def publish(stage: Path): Unit =
+        publishStage(table, stage, expected, legacyMoved, expectAbsent)
+      def fresh(): Ref = ref(table, branch = None)
+    }
+
+    /** A write-audit-publish branch as a commit target (see [[Ref]]). */
+    final class BranchRef private[Warehouse] (val table: String,
+        val branch: String) extends Ref {
+      private val expectHead: Long = branches(table).getOrElse(branch,
+        throw new NoSuchElementException(
+          s"'$table' has no branch '$branch' " +
+            s"(branches: ${branches(table).keys.toSeq.sorted.mkString(", ")}); " +
+            "CALL <catalog>.system.create_branch first"))._1
+      val dir: String = headDir(table, branch, expectHead).toString
+      def versioned: Boolean = true
+      def stage(): Path = allocateStage(table)
+      def carryInto(stage: Path): Unit = carryVersionInto(Paths.get(dir), stage)
+      def publish(stage: Path): Unit =
+        publishStageToBranch(table, stage, branch, expectHead)
+      def fresh(): Ref = ref(table, Some(branch))
+    }
+
+    /** Resolve the commit target of `name`: main when `branch` is None,
+      * else that branch (an unknown branch fails loudly). Binds the CAS
+      * expectation now — see [[Ref]].
+      */
+    def ref(name: String, branch: Option[String]): Ref = branch match {
+      case Some(b) => new BranchRef(name, b)
+      case None => new MainRef(name, currentVersion(name))
+    }
+
+    /** Version number of a stage dir of `name` (from its own name). */
+    private def stageVersion(name: String, versionDir: Path): Long = {
       val m = versionPattern(name).matcher(versionDir.getFileName.toString)
       require(m.matches(), s"$versionDir is not a stage of '$name'")
       m.group(1).toLong
@@ -316,7 +436,7 @@ object Tables {
       * @return true when a legacy dir was migrated (the CAS skips its
       *         expectation for exactly that first commit)
       */
-    private[sources] def migrateLegacy(name: String): Boolean = {
+    private def migrateLegacy(name: String): Boolean = {
       val table = Paths.get(tablePath(name))
       if (Files.exists(table, java.nio.file.LinkOption.NOFOLLOW_LINKS) &&
           !io.isPointer(table)) {
@@ -330,11 +450,9 @@ object Tables {
       } else false
     }
 
-    /** Exclusive stage-dir allocation — [[commit]]'s first half, exposed
-      * separately for EXTERNALLY-DRIVEN writes (the catalog's V2
-      * BatchWrite path, where executor tasks write into the stage before
-      * the driver publishes). Every allocation MUST end in
-      * [[publishStage]] or [[discardStage]].
+    /** Exclusive stage-dir allocation — [[Ref.stage]] for both ref
+      * kinds (numbers are global to the table; refs select). Every
+      * allocation MUST end in a publish or [[discardStage]].
       */
     // UNIQUE version-dir allocation: two INDEPENDENT committers (an
       // ingest stream's JVM and a scheduled maintenance JVM sharing the
@@ -360,7 +478,7 @@ object Tables {
       // On either collision: roll back only what this writer created,
       // bump, retry — each writer ends up sole owner of its stage, so the
       // data write itself needs no lock at all.
-    private[sources] def allocateStage(name: String): Path = {
+    private def allocateStage(name: String): Path = {
       require(!name.contains("/"),
         s"allocation is table-level; '$name' looks like a subdirectory")
       Files.createDirectories(Paths.get(root))
@@ -382,7 +500,7 @@ object Tables {
       versionDir
     }
 
-    /** Publish an allocated-and-written stage — [[commit]]'s second half.
+    /** Publish an allocated-and-written stage to main ([[MainRef.publish]]).
       * The decide-and-swap is the only contended region, and it is
       * microseconds long — serialize it with an exclusive lock file so
       * the CAS is a real compare-and-swap across PROCESSES, not a
@@ -391,15 +509,11 @@ object Tables {
       * commit underlying the reference's table.transaction(),
       * tabular.py:69-70); the lock file is the offline stand-in.
       */
-    private[sources] def publishStage(name: String, versionDir: Path,
+    private def publishStage(name: String, versionDir: Path,
         expectCurrent: Option[Long], legacyMoved: Boolean,
-        expectAbsent: Boolean = false): Unit = {
+        expectAbsent: Boolean): Unit = {
       val table = Paths.get(tablePath(name))
-      val next = {
-        val m = versionPattern(name).matcher(versionDir.getFileName.toString)
-        require(m.matches(), s"$versionDir is not a stage of '$name'")
-        m.group(1).toLong
-      }
+      val next = stageVersion(name, versionDir)
       withCommitLock(name) {
         // settle any crashed fast_forward before moving the pointer —
         // once main commits on top of a half-promoted branch head, the
@@ -529,7 +643,7 @@ object Tables {
       * impl vacates the version number its own safe way; the rationale
       * lives with the impls).
       */
-    private[sources] def discardStage(versionDir: Path): Unit =
+    private def discardStage(versionDir: Path): Unit =
       // the IO impl vacates the number its own safe way (rename-first on
       // POSIX, in-place delete on object stores); the allocation MARKER
       // owns the number until it is deleted LAST, either way
@@ -718,17 +832,10 @@ object Tables {
       }
     }
 
-    /** Overwrite via an atomic versioned commit (see [[commit]]). */
-    def overwrite(df: DataFrame, name: String): Unit = {
-      // root markers ride every snapshot rewrite (stream replay
-      // positions, cursors) — overwrite replaces DATA, not the table's
-      // cross-commit contracts
-      val markers = Tables.readRootMarkers(snapshotPath(name))
-      commit(name) { path =>
-        df.write.mode(SaveMode.Overwrite).parquet(path)
-        Tables.writeRootMarkers(markers, path)
-      }
-    }
+    /** Overwrite via an atomic versioned commit with no CAS expectation
+      * (the last writer wins; see [[Ref.overwrite]]). */
+    def overwrite(df: DataFrame, name: String): Unit =
+      new MainRef(name, expected = None).overwrite(df)
     def append(df: DataFrame, name: String): Unit =
       df.write.mode(SaveMode.Append).parquet(tablePath(name))
 
@@ -767,16 +874,12 @@ object Tables {
       require(timePartitionCol(name).isEmpty,
         s"$name is a hidden-time-partitioned append table; its appends " +
           "are batch-granular (appendBatch), not versioned snapshots")
-      val expected = currentVersion(name)
-      commit(name, expectCurrent = expected) { staged =>
-        df.write.mode(SaveMode.Overwrite).parquet(staged)
-        carryPreviousInto(name, Paths.get(staged))
-      }
+      ref(name, branch = None).append(df)
     }
 
     /** Zero-copy carry of the freshest published version BELOW a staged
-      * one into the stage — [[appendVersioned]]'s append half, exposed
-      * for externally-staged appends (the catalog's streaming write).
+      * one into the stage — [[MainRef.carryInto]], the append half of
+      * every main commit that keeps the previous content.
       */
     private[graft] def carryPreviousInto(name: String, stagedP: Path): Unit = {
       val m = versionPattern(name).matcher(stagedP.getFileName.toString)
@@ -1261,11 +1364,12 @@ object Tables {
     /** Version dir a branch currently serves (readable even though main
       * does not publish it yet — the AUDIT face of write-audit-publish).
       */
-    def branchSnapshotDir(name: String, branch: String): Path = {
-      val (head, _) = branches(name).getOrElse(branch,
-        throw new NoSuchElementException(
-          s"'$name' has no branch '$branch' " +
-            s"(branches: ${branches(name).keys.toSeq.sorted.mkString(", ")})"))
+    def branchSnapshotDir(name: String, branch: String): Path =
+      Paths.get(new BranchRef(name, branch).dir)
+
+    /** The version dir of `branch`'s head `head`, checked present and
+      * stamped (published, or committed to a branch). */
+    private def headDir(name: String, branch: String, head: Long): Path = {
       val dir = Paths.get(s"${tablePath(name)}.v$head")
       require(Files.isDirectory(dir) &&
         (Files.exists(dir.resolve(PublishedMarker)) ||
@@ -1274,37 +1378,16 @@ object Tables {
       dir
     }
 
-    /** Atomic versioned APPEND onto a branch: stage from the table's one
-      * version sequence, carry the BRANCH head's files (zero-copy), CAS
-      * the head prop. The write-audit-publish ingest face.
+    /** Publish a staged version dir as the new HEAD of `branch` — one
+      * CAS on the recorded head prop, the branch analog of
+      * [[publishStage]] ([[BranchRef.publish]]). The stage must already
+      * hold the branch's full post-commit content; on CAS failure the
+      * stage is discarded and the conflict thrown for
+      * [[retryingConflicts]].
       */
-    def appendToBranch(df: DataFrame, name: String, branch: String): Unit = {
-      val expectHead = branches(name).getOrElse(branch,
-        throw new NoSuchElementException(
-          s"'$name' has no branch '$branch'"))._1
-      val headDir = branchSnapshotDir(name, branch)
-      val versionDir = allocateStage(name)
-      try {
-        df.write.mode(SaveMode.Overwrite).parquet(versionDir.toString)
-        carryVersionInto(headDir, versionDir)
-      } catch { case t: Throwable => discardStage(versionDir); throw t }
-      publishStageToBranch(name, versionDir, branch, expectHead)
-    }
-
-    /** Publish an externally-staged version dir as the new HEAD of
-      * `branch` — one CAS on the recorded head prop, the branch analog
-      * of [[publishStage]]. The stage must already hold the branch's
-      * full post-commit content (the caller carried/wrote it); on CAS
-      * failure the stage is discarded and the conflict thrown for
-      * [[retryingConflicts]]. The write-audit-publish DML face
-      * (branch-routed DELETE/UPDATE/MERGE) commits through here.
-      */
-    private[graft] def publishStageToBranch(name: String, versionDir: Path,
+    private def publishStageToBranch(name: String, versionDir: Path,
         branch: String, expectHead: Long): Unit = {
-      val next = {
-        val m = versionPattern(name).matcher(versionDir.getFileName.toString)
-        require(m.matches()); m.group(1).toLong
-      }
+      val next = stageVersion(name, versionDir)
       withCommitLock(name) {
         val props = TableProps.read(this, name)
         val head = props.get(branchHeadKey(branch)).map(_.toLong)
@@ -2028,6 +2111,33 @@ object Tables {
     markers.foreach { case (name, bytes) =>
       Files.write(Paths.get(to).resolve(name), bytes)
     }
+
+  /** True when `dir` holds a data file: a `.parquet` file outside every
+    * `_`/`.`-prefixed name (sidecars, the zone-map manifest and write
+    * debris are not table data), at any depth (bucketed layouts).
+    */
+  private[graft] def hasDataFiles(dir: String): Boolean = {
+    val p = Paths.get(dir)
+    if (!Files.isDirectory(p)) return false
+    val s = Files.walk(p)
+    try s.iterator().asScala.exists(f =>
+      f.getFileName.toString.endsWith(".parquet") &&
+        !p.relativize(f).iterator().asScala.exists(c =>
+          c.toString.startsWith("_") || c.toString.startsWith(".")))
+    finally s.close()
+  }
+
+  /** A version dir needs at least one parquet footer to serve its
+    * schema: when `staged` holds no data file (a rewrite that deleted
+    * every row and carried nothing, an empty streaming epoch), write one
+    * empty part file carrying `schema`, the shape CREATE TABLE commits.
+    */
+  private[graft] def ensureFooter(spark: SparkSession, staged: Path,
+      schema: => org.apache.spark.sql.types.StructType): Unit =
+    if (!hasDataFiles(staged.toString))
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+        .repartition(1).write.mode(SaveMode.Append).parquet(staged.toString)
 
   /** Hidden time partitioning (the Iceberg `days(ts)` partition transform
     * expressed on plain parquet): the table prop naming the timestamp

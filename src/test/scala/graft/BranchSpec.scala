@@ -404,7 +404,7 @@ class BranchSpec extends SparkTestBase {
     try {
       val fs = Seq(df1, df2).map(df => pool.submit(new Runnable {
         def run(): Unit = wh.retryingConflicts(maxAttempts = 10) {
-          wh.appendToBranch(df, "t", "c")
+          wh.ref("t", Some("c")).append(df)
         }
       }))
       fs.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
@@ -860,10 +860,10 @@ class BranchSpec extends SparkTestBase {
     import java.nio.file.{Files, Paths}
     val (cat, wh) = fixture()
     wh.createBranch("t", "r")
-    wh.appendToBranch(Seq((3L, "x")).toDF("id", "s")
-      .localCheckpoint(true), "t", "r")
-    wh.appendToBranch(Seq((4L, "y")).toDF("id", "s")
-      .localCheckpoint(true), "t", "r")
+    wh.ref("t", Some("r")).append(Seq((3L, "x")).toDF("id", "s")
+      .localCheckpoint(true))
+    wh.ref("t", Some("r")).append(Seq((4L, "y")).toDF("id", "s")
+      .localCheckpoint(true))
     val (_, base) = wh.branches("t")("r")
     // the crash window: journal + pointer swap landed, the marker
     // promotion and the branch-base prop write did not
@@ -893,10 +893,10 @@ class BranchSpec extends SparkTestBase {
     import java.nio.file.{Files, Paths}
     val (cat, wh) = fixture()
     wh.createBranch("t", "s2")
-    wh.appendToBranch(Seq((3L, "x")).toDF("id", "s")
-      .localCheckpoint(true), "t", "s2")
-    wh.appendToBranch(Seq((4L, "y")).toDF("id", "s")
-      .localCheckpoint(true), "t", "s2")
+    wh.ref("t", Some("s2")).append(Seq((3L, "x")).toDF("id", "s")
+      .localCheckpoint(true))
+    wh.ref("t", Some("s2")).append(Seq((4L, "y")).toDF("id", "s")
+      .localCheckpoint(true))
     val head = crashAfterSwap(wh, "s2")
     // a MAIN commit lands BEFORE any fast_forward re-run — the advice
     // scenario: main now matches neither base nor head, so the old
@@ -916,8 +916,8 @@ class BranchSpec extends SparkTestBase {
     assert(!Tables.TableProps.read(wh, "t").keys
       .exists(_.endsWith(".ff-pending")), "journal settled")
     // and a later fast_forward of the re-based branch works normally
-    wh.appendToBranch(Seq((5L, "z")).toDF("id", "s")
-      .localCheckpoint(true), "t", "s2")
+    wh.ref("t", Some("s2")).append(Seq((5L, "z")).toDF("id", "s")
+      .localCheckpoint(true))
     intercept[IllegalArgumentException] { wh.fastForward("t", "s2") }
     () // main moved past the re-base: correctly not fast-forwardable
   }
@@ -925,8 +925,8 @@ class BranchSpec extends SparkTestBase {
   test("a crash BEFORE the pointer swap leaves no trace: the journal is dropped and the fast_forward never took effect") {
     val (cat, wh) = fixture()
     wh.createBranch("t", "s3")
-    wh.appendToBranch(Seq((3L, "x")).toDF("id", "s")
-      .localCheckpoint(true), "t", "s3")
+    wh.ref("t", Some("s3")).append(Seq((3L, "x")).toDF("id", "s")
+      .localCheckpoint(true))
     val (head, base) = wh.branches("t")("s3")
     // journal written, swap never ran (pointer still at the fork base)
     Tables.TableProps.write(wh, "t", Tables.TableProps.read(wh, "t") +

@@ -421,6 +421,9 @@ class EqDeletesSpec extends SparkTestBase {
     val msg = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" ")
     assert(msg.contains("NULL"), msg.take(300))
+    // the remedy names a predicate that can match the row: `id IS NULL`
+    // folds to false under the REQUIRED key
+    assert(msg.contains("predicate on non-key columns"), msg.take(600))
     assert(wh.currentVersion("t") == v0, "the refusal must not publish")
     assert(spark.sql(s"SELECT count(*) FROM $cat.t").head.getLong(0) == 2L)
   }
@@ -608,6 +611,7 @@ class EqDeletesSpec extends SparkTestBase {
     val msg = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .map(x => Option(x.getMessage).getOrElse("")).mkString(" ")
     assert(msg.contains("NULL"), msg.take(300))
+    assert(msg.contains("predicate on non-key columns"), msg.take(600))
     spark.sql(s"DELETE FROM $cat.t WHERE grp = 'null2'")
     // fold consumes BOTH kinds in one commit
     spark.sql(s"CALL $cat.system.compact('t', 2)").collect()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.sources.{EqDeletes, GraftCatalog, Tables}
+import graft.sources.{EqDeleteProbe, EqDeletes, GraftCatalog, Tables}
 import graft.sources.Tables.{TableProps, Warehouse}
 
 /** The catalog reads a snapshot with pending sidecars through the same
@@ -160,5 +160,42 @@ class SpliceMorReadsSpec extends SparkTestBase {
         assert(!EqDeletes.anyPending(wh.snapshotPath("t")), root)
         assert(rows() == updated, root)
     } finally Tables.deleteRecursively(relative)
+  }
+
+  test("a catalog read tests the statement's predicate before the key probe and returns the same rows") {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression, LessThan}
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val root = tmpDir("splice-predfirst")
+    val cat = "splicepredfirst"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", root)
+    spark.sql(s"CREATE TABLE $cat.t (id BIGINT, grp INT)")
+    spark.sql(s"INSERT INTO $cat.t SELECT id, CAST(id % 4 AS INT) FROM range(40)")
+    spark.sql(s"ALTER TABLE $cat.t SET TBLPROPERTIES (" +
+      "'write.delete.mode'='merge-on-read', 'cdc.key-column'='id')")
+    spark.sql(s"DELETE FROM $cat.t WHERE grp = 1")
+    assert(EqDeletes.pending(Warehouse(root).snapshotPath("t")).size == 1)
+    val df = spark.sql(s"SELECT id, grp FROM $cat.t WHERE id < 16")
+    assert(df.collect().map(r => (r.getLong(0), r.getInt(1))).toSet ==
+      (0L until 16L).filter(_ % 4 != 1).map(i => (i, (i % 4).toInt)).toSet)
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case o => Seq(o)
+    }
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val probed = plan.collect {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[EqDeleteProbe]) => f.condition
+    }
+    assert(probed.nonEmpty, plan.toString)
+    probed.foreach { c =>
+      val cs = conjuncts(c)
+      val pred = cs.indexWhere(_.isInstanceOf[LessThan])
+      val probe = cs.indexWhere(_.exists(_.isInstanceOf[EqDeleteProbe]))
+      assert(pred >= 0 && pred < probe, c.sql)
+    }
   }
 }
