@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DataType, NumericType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -300,12 +300,13 @@ private[graft] object EqDeletes {
     }
   }
 
-  /** Build a DELETE's matched key set: the rows of `logical` matching
-    * `pred`, projected to the key and deduplicated, in one collect.
+  /** Build a DELETE's matched key set: the rows of `matching` (the
+    * logical read with the statement's predicate already applied, see
+    * [[logicalMorRead]]'s `where`), projected to the key and
+    * deduplicated, in one collect.
     */
-  def matchedKeys(logical: DataFrame, pred: Column, keyCols: Seq[String]): MatchedKeys =
-    collectKeys(logical.filter(coalesce(pred, lit(false)))
-      .select(keyCols.map(col): _*).dropDuplicates(keyCols))
+  def matchedKeys(matching: DataFrame, keyCols: Seq[String]): MatchedKeys =
+    collectKeys(matching.select(keyCols.map(col): _*).dropDuplicates(keyCols))
 
   /** Collect a frame of DISTINCT key tuples to the driver, at most
     * [[MaxKeys]] + 1 of them, as internal rows with their values copied

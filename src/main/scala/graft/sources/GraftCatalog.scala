@@ -2098,10 +2098,11 @@ private[sources] class GraftTable(wh: Warehouse, tableName: String,
         "pointer layout")
     val snap = ref.dir
     // match against the LOGICAL view: earlier pending deletes (both
-    // sidecar kinds) respected
+    // sidecar kinds) respected; a NULL predicate drops the row (the
+    // filter keeps only TRUE), so NULL predicate rows survive
     val matched = EqDeletes.matchedKeys(
       EqDeletes.logicalMorRead(spark, snap, props, where = Some(pred)),
-      pred, keyCols)
+      keyCols)
     // a matched row with a NULL key (any component) cannot be
     // identified by an equality-delete sidecar (the reader filter
     // deliberately keeps null-key rows), and a matched set past
